@@ -226,14 +226,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         import weakref
 
         _LOAD_MEMO = weakref.WeakKeyDictionary()
-    per_session = _LOAD_MEMO.setdefault(spark, {})
-    key = (path, _path_stamp(path))
-    hit = per_session.get(key)
-    if hit is not None:
-        return hit
-    if len(per_session) > 256:  # bound: stamps of rewritten paths pile up
-        per_session.clear()
     if name == "events":
+        # On every call, memo hit or not: queries built on the returned
+        # relation are analyzed and run under the session's confs then.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # The NTZ→TimestampType branch of normalize_event_ts interprets
         # naive wall time in the SESSION timezone; the engine's contract
@@ -241,10 +236,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # caller-built non-UTC session can't silently shift event times.
         if spark.conf.get("spark.sql.session.timeZone") != "UTC":
             spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(path)
+    per_session = _LOAD_MEMO.setdefault(spark, {})
+    key = (path, _path_stamp(path))
+    hit = per_session.get(key)
+    if hit is not None:
+        return hit
+    if len(per_session) > 256:  # bound: stamps of rewritten paths pile up
+        per_session.clear()
+    df = spark.read.parquet(path)
+    if name == "events":
         df = df.withColumn("ts", normalize_event_ts(df))
-    else:
-        df = spark.read.parquet(path)
     per_session[key] = df
     return df
 

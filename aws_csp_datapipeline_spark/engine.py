@@ -1,8 +1,8 @@
 """CspToolsEngine — the reference's API surface as a library facade.
 
 Maps the four Lambda routes (lambda/lambda_function.py:15-18) onto the
-operator library, one DataFrame job per call instead of
-submit/poll/paginate round-trips (SURVEY.md §3):
+operator library, each call launching only the Spark jobs its answer
+needs instead of submit/poll/paginate round-trips (SURVEY.md §3):
 
 - ``get_tools([s_no|login])``  ← GET  /getTools        (:932-968)
 - ``create_tool(record)``      ← POST /createTool      (:1004-1018)
@@ -13,15 +13,32 @@ State is a snapshot DataFrame; every mutation returns a NEW engine
 wrapping the post-state (persist-where-you-like). Status envelopes
 (200/201/400/404) become typed results. The wide ``csp_tools`` schema
 follows FIXTURES.md §F-A / sql/ddl_create_tables.sql:3-26.
+
+Jobs per route over a ``SnapshotStore`` snapshot (opening one launches
+none; AQE runs a shuffle's map side as its own job):
+
+- ``get_tools_envelope``: 1 (records and total_count in one job)
+- ``dashboard()`` with all five datasets collected: 3 (2 for the
+  single aggregation pass behind the four charts, 1 for ``detail``)
+- ``create_tool``: 2 (one aggregate answers both the duplicate check
+  and MAX(s_no)), plus 1 to commit
+- ``update_tool`` / ``delete_tool``: 1 (the key probe), plus 1 to commit
+
+No route builds a frame from a Python list (``createDataFrame(list)``
+puts its rows in a Python-worker RDD): a new row and the dashboard's
+small results travel as Arrow tables into JVM ``LocalRelation``s,
+which collect without a job.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from aws_csp_datapipeline_spark.operators import crud as M
 from aws_csp_datapipeline_spark.operators import relational as R
@@ -40,6 +57,16 @@ CSP_TOOLS_SCHEMA = T.StructType(
         T.StructField("is_display", T.BooleanType(), False),
     ]
 )
+_ARROW_SCHEMA = to_arrow_schema(CSP_TOOLS_SCHEMA)
+
+
+def _local_tools(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """``csp_tools`` rows as a JVM ``LocalRelation``. The typed Arrow
+    build refuses a value of the wrong type (TypeError) instead of
+    casting it, as ``createDataFrame``'s schema check did."""
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA), CSP_TOOLS_SCHEMA
+    )
 
 
 @dataclass
@@ -58,7 +85,7 @@ class CspToolsEngine:
         self.table = (
             table
             if table is not None
-            else spark.createDataFrame([], CSP_TOOLS_SCHEMA)
+            else _local_tools(spark, [])
         )
 
     # ------------------------------------------------------------ reads
@@ -121,20 +148,26 @@ class CspToolsEngine:
         """Insert with uniqueness guard + serial key: duplicate
         tool_name → 400 (check_And_Insert, lambda_function.py:342-352);
         else s_no = COALESCE(MAX,0)+1 — soft-deleted rows still count
-        toward MAX (:269-271) — and 201 with the assigned key."""
-        exists = (
-            self.table.filter(F.col("tool_name") == record["tool_name"]).limit(1).count()
-            > 0
-        )
-        if exists:
+        toward MAX (:269-271) — and 201 with the assigned key.
+
+        One eager aggregate answers both questions; the new row is an
+        Arrow-built local frame already carrying its key, so the commit
+        scans the table once more and nothing else. A None tool_name
+        raises ValueError and a non-string field TypeError."""
+        if record.get("tool_name") is None:
+            raise ValueError("tool_name is required and may not be None")
+        check = self.table.agg(
+            F.bool_or(F.col("tool_name") == F.lit(record["tool_name"])).alias("exists"),
+            F.coalesce(F.max("s_no"), F.lit(0)).alias("max_key"),
+        ).head()
+        if check["exists"]:
             return MutationResult(400, self, message="tool_name already exists")
-        new_row = {f.name: record.get(f.name) for f in CSP_TOOLS_SCHEMA.fields}
-        new_row["s_no"] = 0  # placeholder; assign_serial_keys overwrites
-        new_row["is_display"] = True
-        new_df = self.spark.createDataFrame([new_row], CSP_TOOLS_SCHEMA)
-        merged = M.insert_with_serial_keys(self.table, new_df, "s_no")
-        assigned = merged.agg(F.max("s_no")).head()[0]
-        return MutationResult(201, CspToolsEngine(self.spark, merged), s_no=int(assigned))
+        s_no = check["max_key"] + 1
+        values = {f.name: record.get(f.name) for f in CSP_TOOLS_SCHEMA}
+        values.update(s_no=s_no, is_display=True)
+        new_row = _local_tools(self.spark, [values])
+        merged = self.table.unionByName(new_row.select(*self.table.columns))
+        return MutationResult(201, CspToolsEngine(self.spark, merged), s_no=s_no)
 
     def update_tool(self, s_no: int, updates: dict) -> MutationResult:
         """Guarded keyed update: absent key → 404 (check_And_Update,
@@ -159,7 +192,7 @@ class CspToolsEngine:
         return MutationResult(200, CspToolsEngine(self.spark, out), s_no=s_no)
 
     def _key_exists(self, s_no: int) -> bool:
-        return self.table.filter(F.col("s_no") == s_no).limit(1).count() > 0
+        return not self.table.filter(F.col("s_no") == s_no).isEmpty()
 
     # ---------------------------------------------------------- analytics
 
@@ -174,15 +207,33 @@ class CspToolsEngine:
            the dashboard shows all four spellings as distinct groups)
         4. team × active_inactive counts (grouped bar → pivot)
         5. the 6-column detail table projection
-        """
+
+        The four charts come from ONE aggregation pass — one grouping
+        set per pie chart, each row also counting Active/Inactive for the
+        pivot — and are returned as local frames (collecting them
+        launches no job). ``detail`` stays lazy."""
         v = R.visible(self.table)
+        by = ["tool_script", "team_name", "can_be_reused_across_csp_teams"]
+        ai = F.col("active_inactive")
+        counts = v.groupingSets([[c] for c in by], *by).agg(
+            # the one column this row's grouping set groups by
+            F.coalesce(*[F.when(F.grouping(c) == 0, F.lit(c)) for c in by]).alias("set"),
+            F.count(F.lit(1)).alias("cnt"),
+            F.count_if(ai == "Active").alias("Active"),
+            F.count_if(ai == "Inactive").alias("Inactive"),
+        )
+        # Back to the JVM as a LocalRelation: filtering and collecting it
+        # is folded on the driver, no job.
+        charts = self.spark.createDataFrame(counts.toArrow(), counts.schema)
+
+        def chart(key: str, *cols: str) -> DataFrame:
+            return charts.filter(F.col("set") == key).select(key, *cols)
+
         return {
-            "by_tool_script": R.group_count(v, ["tool_script"]),
-            "by_team": R.group_count(v, ["team_name"]),
-            "by_reused": R.group_count(v, ["can_be_reused_across_csp_teams"]),
-            "team_by_active": R.pivot_count(
-                v, "team_name", "active_inactive", ["Active", "Inactive"]
-            ).na.fill(0, ["Active", "Inactive"]),
+            "by_tool_script": chart("tool_script", "cnt"),
+            "by_team": chart("team_name", "cnt"),
+            "by_reused": chart("can_be_reused_across_csp_teams", "cnt"),
+            "team_by_active": chart("team_name", "Active", "Inactive"),
             "detail": v.select(
                 "s_no", "team_name", "tool_name", "active_inactive",
                 "created_date", "can_be_reused_across_csp_teams",

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -22,8 +22,8 @@ def json_envelope(
     allow_full_collect: bool = False,
     order_by: str | list[str] | None = None,
 ) -> str:
-    """``{total_count, records}`` envelope. total_count is computed
-    distributed; only ``limit`` records are collected (the reference
+    """``{total_count, records}`` envelope. total_count counts every
+    row of ``df``; only ``limit`` records are collected (the reference
     caps interactive results at LIMIT 150,
     sql/ddl_create_tables.sql:36).
 
@@ -37,6 +37,13 @@ def json_envelope(
     while here total_count counts all rows and records is the capped
     prefix.
 
+    An ordered capped envelope is one Spark job: its top-K reads every
+    row, and total_count is a ``DataFrame.observe`` count on that job.
+    Without a limit, total_count is the number of records collected.
+    An unordered ``limit(n)`` stops reading early, and ``limit=0`` may
+    be pruned to an empty relation, so those keep a separate
+    ``count()``.
+
     This is the one deliberate ``.collect()`` in the codebase — an
     API-parity endpoint for bounded interactive results, not a query
     operator. Misuse guard: with ``limit=None`` the WHOLE result ships
@@ -49,12 +56,30 @@ def json_envelope(
             "on the driver; pass limit=N (the reference caps at 150) "
             "or explicitly opt in with allow_full_collect=True"
         )
-    total = df.count()
+    observation = None
     out = df
+    if order_by is not None and limit:
+        # the top-K reads every row, so it can count them too
+        observation = Observation()
+        out = out.observe(observation, F.count(F.lit(1)).alias("n"))
     if order_by is not None:
         cols = [order_by] if isinstance(order_by, str) else list(order_by)
-        out = out.orderBy(*cols)
-    rows = (out.limit(limit) if limit is not None else out).toJSON().collect()
+        # A struct key sorts exactly like the column list, but no input
+        # ordering can satisfy it: given an input already sorted on the
+        # columns, the top-K would read only `limit` rows per partition
+        # and the observed count would come up short.
+        out = out.orderBy(F.struct(*cols))
+    if limit is not None:
+        out = out.limit(limit)
+    # A Dataset action: an RDD action (toJSON().collect()) leaves the
+    # observation unfilled.
+    rows = [r.json for r in json_lines(out).collect()]
+    if limit is None:
+        total = len(rows)
+    elif observation is not None:
+        total = observation.get["n"]
+    else:
+        total = df.count()
     return json.dumps({"total_count": total, "records": [json.loads(r) for r in rows]})
 
 

@@ -17,17 +17,26 @@ table.
 
 Layout under ``root/``::
 
-    _commits/00000001.json   -> {"data": "<data dir name>"} (atomic
-    _commits/00000002.json      O_EXCL create = the commit point)
+    _commits/00000001.json   -> {"data": "<data dir name>",
+    _commits/00000002.json       "schema": <StructType JSON>}
+                                (atomic put-if-absent = the commit point)
     data/<uuid>/...parquet   (written BEFORE the manifest; an orphan
                               dir from a failed/lost race is garbage,
                               never visible)
 
-Atomicity relies on ``O_CREAT | O_EXCL`` create semantics — correct on
-local/NFS/HDFS-compatible filesystems. On S3 the same protocol is what
-Delta implements with a coordination layer for put-if-absent; the
-engine-side contract (read version, transform, commit-or-retry) is
-unchanged, which is why the CRUD operators stay storage-agnostic.
+The manifest carries the table schema so a read hands it to
+``spark.read.schema(...)``: no footer-inference job per snapshot open.
+File sources make every field nullable, so the schema a read returns
+is the one inference would give.
+
+Atomicity relies on ``link(2)`` failing when the target exists: the
+manifest is staged under a private name, then hard-linked to its
+version name, so it appears whole or not at all and a reader never
+opens a half-written one — correct on local/NFS filesystems. On S3
+the same protocol is what Delta implements with a coordination layer
+for put-if-absent; the engine-side contract (read version, transform,
+commit-or-retry) is unchanged, which is why the CRUD operators stay
+storage-agnostic.
 """
 
 from __future__ import annotations
@@ -38,6 +47,7 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 class ConcurrentWriteError(Exception):
@@ -58,18 +68,18 @@ class SnapshotStore:
         versions = [int(c.split(".")[0]) for c in commits if c.endswith(".json")]
         return max(versions, default=0)
 
-    def _data_dir(self, version: int) -> str:
-        manifest = os.path.join(self.root, "_commits", f"{version:08d}.json")
-        with open(manifest) as fh:
-            return os.path.join(self.root, "data", json.load(fh)["data"])
-
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
         """Snapshot at ``version`` (default: latest). None for an empty
-        table — the caller supplies the seed schema on first write."""
+        table — the caller supplies the seed schema on first write.
+        Launches no Spark job: the schema comes from the manifest."""
         v = self.version() if version is None else version
         if v == 0:
             return None
-        return spark.read.parquet(self._data_dir(v))
+        with open(os.path.join(self.root, "_commits", f"{v:08d}.json")) as fh:
+            manifest = json.load(fh)
+        return spark.read.schema(T.StructType.fromJson(manifest["schema"])).parquet(
+            os.path.join(self.root, "data", manifest["data"])
+        )
 
     # ---- write side ------------------------------------------------
 
@@ -77,7 +87,7 @@ class SnapshotStore:
         """Persist ``df`` as version ``expected_version + 1``.
 
         The parquet data lands in an unreferenced uuid directory first;
-        the O_EXCL manifest create is the single atomic commit point.
+        publishing the manifest is the single atomic commit point.
         Raises ConcurrentWriteError if any other writer committed that
         version first (the data dir is then an invisible orphan).
         """
@@ -87,14 +97,17 @@ class SnapshotStore:
         )
         target = expected_version + 1
         manifest = os.path.join(self.root, "_commits", f"{target:08d}.json")
+        staged = os.path.join(self.root, "_commits", f".{data_name}.tmp")
+        with open(staged, "w") as fh:
+            json.dump({"data": data_name, "schema": df.schema.jsonValue()}, fh)
         try:
-            fd = os.open(manifest, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.link(staged, manifest)
         except FileExistsError as exc:
             raise ConcurrentWriteError(
                 f"version {target} was committed by another writer"
             ) from exc
-        with os.fdopen(fd, "w") as fh:
-            json.dump({"data": data_name}, fh)
+        finally:
+            os.remove(staged)
         return target
 
     def mutate(

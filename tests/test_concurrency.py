@@ -158,3 +158,27 @@ def test_uncommitted_write_is_invisible(spark):
             .write.parquet(os.path.join(d, "data", orphan))
         assert store.version() == 1
         assert {r["s_no"] for r in store.read(spark).collect()} == {1, 2}
+
+
+def test_manifest_schema_read_matches_inference(spark):
+    """The manifest is {"data", "schema"}; a read takes the schema from
+    it and returns what footer inference would (a file source makes
+    every field nullable), for the latest and an older version."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    with tempfile.TemporaryDirectory() as d:
+        store = SnapshotStore(d)
+        seed = spark.range(3).withColumn("name", F.lit("x"))  # non-nullable fields
+        store.commit(seed, expected_version=0)
+        store.mutate(spark, lambda t: t.withColumn("name", F.upper("name")))
+        for version in (1, 2):
+            with open(os.path.join(d, "_commits", f"{version:08d}.json")) as fh:
+                manifest = json.load(fh)
+            assert set(manifest) == {"data", "schema"}
+            inferred = spark.read.parquet(os.path.join(d, "data", manifest["data"])).schema
+            assert store.read(spark, version=version).schema == inferred
+        assert {r["name"] for r in store.read(spark, version=1).collect()} == {"x"}
+        assert {r["name"] for r in store.read(spark).collect()} == {"X"}

@@ -92,6 +92,21 @@ def test_step7_empty_table_first_key_is_one(spark):
     assert res.status == 201 and res.s_no == 1
 
 
+@pytest.mark.parametrize(
+    "record, error",
+    [
+        ({"tool_name": None, "team_name": "CCS"}, ValueError),  # non-nullable key
+        ({"tool_name": "tool_typed", "team_name": 5}, TypeError),  # not a string
+    ],
+)
+def test_create_refuses_record_outside_schema(seeded, record, error):
+    """POST /createTool's body is outside input: a None tool_name or a
+    wrongly typed field is refused, never committed or cast."""
+    with pytest.raises(error):
+        seeded.create_tool(record)
+    assert seeded.total_count() == 10
+
+
 def test_dashboard_datasets(seeded):
     """The five QuickSight chart datasets (dashboard PNG shapes) over
     the seeded table, cross-checked against hand counts."""

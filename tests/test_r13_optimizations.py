@@ -66,6 +66,26 @@ class TestLoadTableMemo:
         assert a is not b
         assert b.count() == 4
 
+    def test_memo_hit_still_forces_utc_for_events(self, spark, sf_smoke):
+        """A session time zone changed after the first events load must
+        not shift event times on a memo hit: a query built on the
+        memoized relation renders ``ts`` in the session's zone, so
+        load_table must re-force UTC on every call."""
+        from pyspark.sql import functions as F
+
+        def times(df):
+            ts = df.orderBy("event_id").select(F.col("ts").cast("string"))
+            return [r[0] for r in ts.limit(20).collect()]
+
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        try:
+            before = times(catalog.load_table(spark, sf_smoke, "events"))
+            spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+            after = times(catalog.load_table(spark, sf_smoke, "events"))
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", tz)
+        assert after == before
+
 
 class TestZeroEagerJobsAtPlanBuild:
     """VERDICT r12 item 9: building every headline DataFrame must
