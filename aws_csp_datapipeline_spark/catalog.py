@@ -194,13 +194,16 @@ def _tune_runtime(spark: SparkSession) -> None:
 _LOAD_MEMO = None  # WeakKeyDictionary[SparkSession, dict[tuple, DataFrame]]
 
 
-def _path_stamp(path: str) -> tuple:
+def _path_stamp(path: str) -> tuple | None:
+    """(mtime_ns, size) of ``path``, or None when it cannot be stat'ed
+    (a remote URI, a permission error): a change there is undetectable,
+    so such a path is never memoized."""
     import os
 
     try:
         st = os.stat(path)
     except OSError:
-        return (0, 0)
+        return None
     return (st.st_mtime_ns, st.st_size)
 
 
@@ -237,7 +240,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if spark.conf.get("spark.sql.session.timeZone") != "UTC":
             spark.conf.set("spark.sql.session.timeZone", "UTC")
     per_session = _LOAD_MEMO.setdefault(spark, {})
-    key = (path, _path_stamp(path))
+    stamp = _path_stamp(path)
+    key = (path, stamp)
     hit = per_session.get(key)
     if hit is not None:
         return hit
@@ -246,7 +250,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(path)
     if name == "events":
         df = df.withColumn("ts", normalize_event_ts(df))
-    per_session[key] = df
+    if stamp is not None:
+        per_session[key] = df
     return df
 
 

@@ -11,9 +11,11 @@ that references nothing caller-specific (literal params arrays,
 literal variant maps, lane-key SQL keyed only by static column
 names) can be built once per JVM and reused by every plan.
 
-Cache entries are keyed on the py4j gateway identity as well: if the
-JVM gateway is ever torn down and relaunched, stale JavaObject
-handles must never leak into the new JVM.
+Cache entries belong to the py4j gateway they were built on: if the
+JVM gateway is ever torn down and relaunched, the cache is emptied,
+so stale JavaObject handles never leak into the new JVM. The module
+holds that gateway object itself, not its ``id()``, which a new
+gateway could reuse once the old one is collected.
 """
 
 from __future__ import annotations
@@ -24,18 +26,21 @@ from pyspark import SparkContext
 from pyspark.sql import Column
 
 _CACHE: dict[tuple, Column] = {}
+_GATEWAY = None  # the gateway every entry in _CACHE was built on
 
 
 def cached_column(key: tuple, builder: Callable[[], Column]) -> Column:
     """Return the memoized Column for ``key``, building it once per
     (gateway, key). ``builder`` must construct a tree with no free
     references to caller state beyond what ``key`` encodes."""
-    gw = SparkContext._gateway
-    full = (id(gw) if gw is not None else None, *key)
-    col = _CACHE.get(full)
+    global _GATEWAY
+    if SparkContext._gateway is not _GATEWAY:
+        _CACHE.clear()
+        _GATEWAY = SparkContext._gateway
+    col = _CACHE.get(key)
     if col is None:
         if len(_CACHE) > 512:  # keys are static; this never triggers
             _CACHE.clear()  # pragma: no cover
         col = builder()
-        _CACHE[full] = col
+        _CACHE[key] = col
     return col

@@ -505,7 +505,8 @@ def _minhash_array(sh: DataFrame, k: int, hash: str = "xxhash64") -> DataFrame:
     # static literal params — built as ONE cached parsed expression:
     # k structs through the Column API cost ~3 py4j round-trips each
     # (~0.3 s of pure driver chatter per plan build at k=100); the
-    # SQL text parses JVM-side once per (k, seed) and is memoized
+    # SQL text parses JVM-side once per k (the seed is always the
+    # default) and is memoized
     # (r13, guide §5 driver-side plan build)
     from aws_csp_datapipeline_spark.exprcache import cached_column
 

@@ -145,17 +145,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[float(v) for v in rng.standard_normal(dim)] for _ in range(n_planes)]
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id from random hyperplane projections."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(x) for x in plane])
-        bucket = bucket + F.when(dot(vec, p) > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return bucket
-
-
 def auto_ivf_cells(n_rows: int, floor: int = 16, cap: int = 4096) -> int:
     """The IVF cell-count scale rule: ``n_cells ≈ √N`` (the classic
     inverted-file balance — per-probe scan cost n_probe·N/cells and

@@ -250,12 +250,3 @@ def dedup_by_keys(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def anti_join_new_loads(
-    incoming: DataFrame, existing: DataFrame, keys: Sequence[str]
-) -> DataFrame:
-    """M7 cross-load form: drop incoming rows whose load key already
-    landed (incoming ⟕̸ existing), the reference's date-check dedup
-    between loads."""
-    return incoming.join(existing, list(keys), "left_anti")

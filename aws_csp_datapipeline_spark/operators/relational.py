@@ -143,12 +143,6 @@ def pivot_count(
     )
 
 
-def group_sum(df: DataFrame, keys: Sequence[str], val: str, alias: str) -> DataFrame:
-    """Group-by SUM — "Tool usage by team" (README.md:88, schema
-    README.md:67-73)."""
-    return df.groupBy(*keys).agg(F.sum(val).alias(alias))
-
-
 def next_serial_key(df: DataFrame, key: str) -> DataFrame:
     """``COALESCE(MAX(s_no),0)+1`` — the serial-key assignment scalar
     (lambda/lambda_function.py:269-271), with the empty-table edge.

@@ -34,12 +34,16 @@ def get_spark(
     app_name: str = "aws_csp_datapipeline_spark",
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
+    retained_stages: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores. On a
     real cluster the master/memory settings come from spark-submit and
     these builder calls are inert; the sql.* tuning still applies.
+    ``retained_stages`` raises the status store's stage limit (Spark's
+    default keeps 1,000) for a caller that reads job groups back over
+    a long run, such as ``bench.py``.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
@@ -104,6 +108,8 @@ def get_spark(
         .config("spark.cleaner.periodicGC.interval", "5min")
         .config("spark.ui.enabled", "false")
     )
+    if retained_stages is not None:
+        builder = builder.config("spark.ui.retainedStages", str(retained_stages))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

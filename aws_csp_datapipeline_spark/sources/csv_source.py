@@ -42,11 +42,3 @@ def read_messy_csv(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.csv(path)
-
-
-def read_json_records(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """JSON source (SURVEY.md §2.1 S2) — explicit schema, no
-    inference job."""
-    return spark.read.schema(schema).json(path)

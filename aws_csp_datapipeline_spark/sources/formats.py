@@ -19,14 +19,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def _has_package(spark: SparkSession, probe_format: str, probe_path: str) -> bool:
-    try:
-        spark.read.format(probe_format).load(probe_path)
-        return True
-    except Exception:
-        return False
-
-
 def read_avro(spark: SparkSession, path: str) -> DataFrame:
     """Avro source — requires the spark-avro package jar."""
     try:
@@ -62,8 +54,8 @@ def read_kafka_stream(
     """Kafka streaming source — requires the spark-sql-kafka package
     jar (absent in this environment; gated like avro/delta). The
     downstream pipeline is source-agnostic: the file-source ingest in
-    ``streaming/ingest.py`` consumes the same (key, value, timestamp)
-    shape this returns."""
+    ``plans/q_streaming.st1_stream_ingest_dedup`` consumes the same
+    (key, value, timestamp) shape this returns."""
     try:
         return (
             spark.readStream.format("kafka")

@@ -1,60 +1,17 @@
-"""Incremental micro-batch ingest — the reference's Phase-1 design
-(S3 object upload → trigger → clean → dedup → load; README.md:42-56)
-restated as a Structured Streaming file source.
-
-Exactly-once = file-source checkpointing (each file processed once)
-+ idempotent dedup inside ``foreachBatch`` (the reference's
-"date check", README.md:56). Watermarked event-time windows cover the
-late-data case the reference never handled.
+"""Event-time operators for the incremental ingest path — the
+reference's Phase-1 design (S3 object upload → trigger → clean →
+dedup → load; README.md:42-56). The checkpointed file-source ingest
+itself (exactly-once via file-source checkpointing plus an idempotent
+dedup inside ``foreachBatch``, the reference's "date check",
+README.md:56) is ``plans/q_streaming.st1_stream_ingest_dedup``.
+Watermarked event-time windows cover the late-data case the
+reference never handled.
 """
 
 from __future__ import annotations
 
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def stream_ingest_files(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    dedup_keys: list[str],
-    order_col: str,
-    fmt: str = "parquet",
-    checkpoint_dir: str | None = None,
-    sink_table: str = "ingested",
-) -> DataFrame:
-    """Replay a landing directory through a checkpointed file-source
-    stream with per-batch dedup, synchronously (availableNow), into an
-    in-memory sink table. Returns the final ingested DataFrame.
-
-    In production the sink is a parquet/Delta append inside
-    ``foreachBatch`` with the same dedup-vs-sink anti-join; the memory
-    sink keeps the driver check hermetic.
-    """
-    from aws_csp_datapipeline_spark.operators.crud import dedup_by_keys
-
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="ingest_ckpt_")
-    stream = spark.readStream.schema(schema).format(fmt).load(source_dir)
-
-    spark.sql(f"DROP TABLE IF EXISTS {sink_table}")
-    batches: list = []
-
-    def handle_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        cleaned = dedup_by_keys(batch_df, dedup_keys, order_col)
-        cleaned.write.mode("append").saveAsTable(sink_table)
-
-    q = (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
 
 
 def windowed_event_counts(

@@ -1,19 +1,62 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+"""The repo's measurement protocol: cold, forced runs of registry
+queries at ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 test data),
+each with its per-layer breakdown. Prints ONE JSON line, the last
+thing on stdout:
 
-Each query is fully executed (count() action → all partitions
-materialize) and timed after a warm-up of the session + parquet
-footer reads.
+{"metric": ..., "value": total_sec, "unit": "sec", "layers": {...},
+ "queries": {...}, "queries_median": {...}, "sf": ..., ...}
 
-Single-run timings at this scale are dominated by machine noise: three
-back-to-back runs of identical round-4 code on this host totalled
-33.0 / 40.4 / 39.8 s (±20 %), with per-query swings up to 65 % on
-queries whose code had not changed (see SCALE.md "Bench variance").
-Each query therefore runs $SPARK_GRAFT_BENCH_REPS times (default 3)
-and reports the per-query MIN — the capability number, stable across
-runs — plus the per-query MEDIAN (``queries_median``; the
-expected-case number) and per-rep totals so the spread stays visible.
+Run:
+    python bench.py                      # the HEADLINE queries
+    python bench.py er3_indel_complete_matches d3_minhash_lsh_pairs
+
+Query names given as arguments replace the headline list. The only
+settings are ``SPARK_GRAFT_SF_DIR`` and ``SPARK_GRAFT_BENCH_REPS``
+(default 3); the session always comes from ``session.get_spark``, so
+``SPARK_GRAFT_CPUS`` sets its cores. Compare two records with
+``tools/bench_compare.py``.
+
+One sample is the timed region ``clearCache()`` + the registry query
+build + ``force()``, which hashes every output column
+(``bit_xor(xxhash64(*cols))``) so Catalyst cannot prune work whose
+output nobody reads. The session and parquet footers are warmed by
+one untimed run first.
+
+Warm/cold contract. Warm across reps (built once per session and
+reused by every later build): ``catalog.load_table`` plan handles,
+``exprcache`` expression trees and s1's query vector
+(``similarity.query_vector``), besides the JVM's JIT and the OS page
+cache. Cold in every sample: table data (every action scans parquet)
+and every persisted intermediate (``clearCache()`` unpersists them,
+so CacheManager plan dedup cannot serve a rep, or a same-plan
+sibling, from an earlier one). ``tests/test_bench_contract.py`` pins
+the cold half.
+
+Single-run timings at this scale are dominated by machine noise
+(SCALE.md "Bench variance": ±20 % totals and up to 65 % per query on
+unchanged code), so each query runs ``SPARK_GRAFT_BENCH_REPS`` times
+and reports its MIN (``queries``, the capability number), its MEDIAN
+(``queries_median``, the expected case) and per-rep totals
+(``rep_totals``) so the spread stays visible.
+
+Each sample runs in its own Spark job group. After it is timed, the
+group is read back through ``perfbench/layers.py``: ``layers[name]``
+holds the per-key median over reps of ``build_s`` (plan construction
+in Python/py4j), the group's jobs, stages, skipped stages, tasks,
+task seconds, shuffle MB and spill MB (``exec_s`` is the time during
+which its jobs ran) and the Catalyst analysis, optimization and
+planning times of the forced plan. The last rep also prints one line
+per stage to stderr.
+
+Those reads come from Spark's status store, which evicts stages past
+``spark.ui.retainedStages``, SKIPPED ones first and including those of
+the group just run. So bench.py sizes the limit from the run:
+``STAGES_PER_SAMPLE`` for each sample and the warm-up (the heaviest
+headline query, er3, runs 65 stages at sf0.1; a 3-rep headline run
+about 2,250), with no ceiling on reps or names. The store holds what
+the run actually ran, not the limit. A sample whose stages left the
+store anyway keeps its time; its job-group keys are missing from its
+``layers`` median and stderr says so.
 """
 
 from __future__ import annotations
@@ -23,6 +66,10 @@ import os
 import statistics
 import sys
 import time
+
+from py4j.protocol import Py4JJavaError
+
+from perfbench.layers import catalyst_phases, job_group_stats
 
 
 HEADLINE = [
@@ -123,86 +170,146 @@ HEADLINE = [
 ]
 
 
+# Status-store stages allowed per sample (see the module docstring).
+STAGES_PER_SAMPLE = 200
+
+
+def force(df):
+    """Force FULL evaluation of every output column and return the
+    forced plan and its hash. A bare ``.count()`` lets Catalyst prune
+    count-invariant work — final projections (t1/t2/tt1's per-row
+    expressions), Window nodes whose output no one reads (tt11's pos),
+    and multiplicity-preserving left joins (d10's pair join) — so
+    count-timings measured only the scan for those shapes. Hashing
+    every column into one bit_xor aggregate defeats pruning while
+    adding one cheap hash per output row."""
+    from pyspark.sql import functions as F
+
+    fdf = df.agg(F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])))
+    return fdf, fdf.collect()[0][0]
+
+
+def sample(spark, fn, sf_dir: str, group: str) -> tuple[float, dict]:
+    """One cold sample of query ``fn`` in job group ``group``: its
+    seconds, then its layer numbers, read after the clock stops."""
+    spark.sparkContext.setJobGroup(group, group)
+    t0 = time.perf_counter()
+    spark.catalog.clearCache()
+    tb = time.perf_counter()
+    df = fn(spark, sf_dir)
+    build_s = time.perf_counter() - tb
+    fdf, _ = force(df)
+    dt = time.perf_counter() - t0
+    layer = {"build_s": build_s, **catalyst_phases(fdf)}
+    try:
+        stats = job_group_stats(spark, group)
+    except Py4JJavaError as e:
+        print(f"# {group}: no job-group stats: {e.java_exception}", file=sys.stderr)
+    else:
+        stats["exec_s"] = stats.pop("s")
+        layer.update(stats)
+    return dt, layer
+
+
+def print_stages(spark, name: str, group: str) -> None:
+    """One stderr line per stage of job group ``group``, saying where
+    the group's ``layers`` totals come from: the stage's wall ms and
+    its operator scopes from the status store (kept with the UI off),
+    or that it was skipped."""
+    tracker = spark.sparkContext.statusTracker()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    for sid in sorted({s for j in jobs if j is not None for s in j.stageIds}):
+        try:
+            sd = store.lastStageAttempt(sid)
+            if str(sd.status()) == "SKIPPED":
+                print(f"# {name} stage {sid} skipped", file=sys.stderr)
+                continue
+            ms = sd.completionTime().get().getTime() - sd.submissionTime().get().getTime()
+            scopes: list[str] = []
+            todo = [store.operationGraphForStage(sid).rootCluster()]
+        except Py4JJavaError:
+            print(f"# {name} stage {sid} left the status store", file=sys.stderr)
+            continue
+        while todo:
+            kids = todo.pop().childClusters()
+            for i in range(kids.size()):
+                scopes.append(kids.apply(i).name().strip())
+                todo.append(kids.apply(i))
+        print(f"# {name} stage {sid} {ms}ms  {' | '.join(dict.fromkeys(scopes))}", file=sys.stderr)
+
+
+def record(samples, layers, rep_totals, sf: str, reps: int) -> dict:
+    """The bench's JSON record. ``layers`` goes before the per-query
+    times so a capture that keeps only the end of the line still ends
+    with ``queries_median`` and the meta keys (``tools/bench_compare``
+    reads such tails)."""
+    timings = {n: round(min(s), 4) for n, s in samples.items()}
+    medians = {n: round(statistics.median(s), 4) for n, s in samples.items()}
+    return {
+        "metric": "headline_queries_total",
+        "value": round(sum(timings.values()), 4),
+        "unit": "sec",
+        "layers": {
+            n: {
+                k: round(statistics.median(r[k] for r in rs if k in r), 4)
+                for k in dict.fromkeys(k for r in rs for k in r)
+            }
+            for n, rs in layers.items()
+        },
+        "queries": timings,
+        "queries_median": medians,
+        "median_total": round(sum(medians.values()), 4),
+        "sf": sf,
+        "reps": reps,
+        "rep_totals": rep_totals,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
     from aws_csp_datapipeline_spark.session import get_spark
     from aws_csp_datapipeline_spark.plans import registry
 
-    spark = get_spark(app_name="bench")
     qs = registry.queries()
-    names = [n for n in HEADLINE if n in qs]
-    # include any extra headline queries registered later
-    extra = os.environ.get("SPARK_GRAFT_BENCH_EXTRA", "")
-    names += [n for n in extra.split(",") if n and n in qs and n not in names]
-
-    from pyspark.sql import functions as F
-
-    def force(df):
-        """Force FULL evaluation of every output column. A bare
-        ``.count()`` lets Catalyst prune count-invariant work — final
-        projections (t1/t2/tt1's per-row expressions), Window nodes
-        whose output no one reads (tt11's pos), and multiplicity-
-        preserving left joins (d10's pair join) — so count-timings
-        measured only the scan for those shapes. Hashing every column
-        into one bit_xor aggregate defeats pruning while adding one
-        cheap hash per output row."""
-        df.agg(F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns]))).collect()
-
-    def timed_run(name):
-        """One COLD-cache execution. Spark's CacheManager dedups
-        identical plans session-wide, so without clearing, a query
-        that persists an intermediate would serve reps 2-3 (and any
-        same-plan sibling, e.g. s10's BM25 sharing t12's) from the
-        rep-1 cache — min-of-reps would then time cache-hit reads,
-        not query execution. Clearing per run keeps every sample a
-        full from-parquet execution; JVM/JIT/page-cache warmth still
-        motivates min-of-reps."""
-        spark.catalog.clearCache()
-        force(qs[name](spark, sf_dir))
+    names = sys.argv[1:] or [n for n in HEADLINE if n in qs]
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {unknown}")
+    spark = get_spark(
+        app_name="bench", retained_stages=(reps * len(names) + 1) * STAGES_PER_SAMPLE
+    )
 
     # Warm-up: touch the session and parquet footers once, not timed.
     force(qs[names[0]](spark, sf_dir))
 
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     samples: dict[str, list[float]] = {n: [] for n in names}
+    layers: dict[str, list[dict]] = {n: [] for n in names}
     rep_totals: list[float] = []
-    for _ in range(reps):
+    for rep in range(reps):
         rep_total = 0.0
         for name in names:
-            t0 = time.perf_counter()
-            timed_run(name)
-            dt = time.perf_counter() - t0
+            group = f"bench-{name}-{rep}"
+            dt, layer = sample(spark, qs[name], sf_dir, group)
             rep_total += dt
             samples[name].append(dt)
+            layers[name].append(layer)
+            if rep == reps - 1:
+                rounded = {k: round(v, 3) for k, v in layer.items()}
+                print(f"# {name}: {dt:.3f}s {rounded}", file=sys.stderr)
+                print_stages(spark, name, group)
         rep_totals.append(round(rep_total, 4))
 
-    timings = {n: round(min(s), 4) for n, s in samples.items()}
-    medians = {n: round(statistics.median(s), 4) for n, s in samples.items()}
-    total = round(sum(timings.values()), 4)
     # The JSON line is the bench contract; guarantee it is the LAST
     # thing on stdout and flushed (r13, VERDICT r12 item 8: the r11
     # record was captured truncated/unparsed, erasing a whole
     # round-over-round comparison — Spark logs go to stderr, and an
     # explicit flush means a capture that kills the process right
     # after reading the line still has the complete record).
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "queries_median": medians,
-                "median_total": round(sum(medians.values()), 4),
-                "sf": sf,
-                "reps": reps,
-                "rep_totals": rep_totals,
-            }
-        ),
-        flush=True,
-    )
+    print(json.dumps(record(samples, layers, rep_totals, sf, reps)), flush=True)
 
 
 if __name__ == "__main__":

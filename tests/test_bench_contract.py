@@ -1,0 +1,67 @@
+"""bench.py's warm/cold contract: every sample starts cold. After a
+forced run and ``clearCache()`` nothing is persisted — no RDD in
+``getPersistentRDDs()`` and an empty CacheManager — so a later rep
+cannot be served from an earlier one, and a rebuild reproduces the
+first run's hash."""
+
+from __future__ import annotations
+
+import pytest
+
+import bench
+
+
+@pytest.mark.parametrize("name", bench.HEADLINE)
+def test_sample_leaves_nothing_cached(spark, sf_smoke, name):
+    from aws_csp_datapipeline_spark.plans.registry import queries
+
+    fn = queries()[name]
+    spark.catalog.clearCache()
+    _, first = bench.force(fn(spark, sf_smoke))
+    spark.catalog.clearCache()
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    _, again = bench.force(fn(spark, sf_smoke))
+    spark.catalog.clearCache()
+    assert again == first
+
+
+def test_sample_keeps_its_time_when_its_stages_left_the_status_store(
+    spark, sf_smoke, monkeypatch
+):
+    """Spark's status store evicts stages past its limit, those of the
+    group just run included; reading them back then raises. The sample
+    still returns its time, and its layers lack only the job-group
+    keys."""
+    from aws_csp_datapipeline_spark.plans.registry import queries
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+    monkeypatch.setattr(
+        bench, "job_group_stats", lambda spark, gid: store.lastStageAttempt(-1)
+    )
+    dt, layer = bench.sample(spark, queries()["q1_pricing_summary"], sf_smoke, "bench-evicted")
+    assert dt > 0
+    assert set(layer) == {"build_s", "analysis_ms", "optimization_ms", "planning_ms"}
+
+
+def test_layer_medians_skip_missing_samples():
+    full = {"build_s": 1.0, "jobs": 4}
+    rec = bench.record(
+        {"a": [1.0, 2.0, 3.0]},
+        {"a": [full, {"build_s": 3.0}, {**full, "jobs": 6}]},
+        [1.0, 2.0, 3.0],
+        "0.1",
+        3,
+    )
+    assert rec["layers"] == {"a": {"build_s": 1.0, "jobs": 5}}
+    assert rec["queries"] == {"a": 1.0} and rec["queries_median"] == {"a": 2.0}
+
+
+def test_stage_lines_name_each_stage(spark, sf_smoke, capsys):
+    from aws_csp_datapipeline_spark.plans.registry import queries
+
+    bench.sample(spark, queries()["a5_group_count_2key"], sf_smoke, "bench-stages")
+    bench.print_stages(spark, "a5", "bench-stages")
+    lines = capsys.readouterr().err.splitlines()
+    assert lines and all(line.startswith("# a5 stage ") for line in lines)
+    assert any("ms " in line and "Exchange" in line for line in lines)

@@ -1,95 +1,154 @@
-"""Compare two BENCH_r*.json records with host-drift context.
-
-Raw round-over-round ratios on this host are dominated by machine
-noise (SCALE.md "Bench variance": ±35% swings; round 9 proved the
-drift environmental by rerunning frozen round-7 code). This tool
-makes the comparison honest:
-
-- per-query ratios use each record's MEDIANS when present (min
-  otherwise), sorted worst-first;
-- the summary reports the median-of-ratios (robust to a few noisy
-  lanes) next to the sum ratio (which a single slow lane can drag);
-- an optional anchor factor (e.g. from BENCH_sf100_r10.json's
-  frozen-code anchor lanes) rescales the newer record before
-  comparing.
+"""Compare two bench records: per-query NEW/OLD ratios, worst first,
+with the median-of-ratios (robust to a few noisy lanes) beside the sum
+ratio (which one slow lane can drag).
 
 Usage:
-  python tools/bench_compare.py BENCH_r09.json BENCH_r10.json
-  python tools/bench_compare.py OLD NEW --anchor 1.6   # NEW ran on a
-                                                       # 1.6x-slow host
+  python tools/bench_compare.py OLD NEW [--record R] [--out O] [--top N]
+
+OLD and NEW may be a ``python bench.py`` stdout capture, a repo-format
+record (the bench.py JSON) or a round record ``BENCH_r{N}.json``
+(its ``parsed`` block, or the JSON line embedded in its stdout
+``tail``). Per-query times are the medians when a record has them,
+the mins otherwise.
+
+Raw round-over-round ratios on one host are dominated by machine
+noise (SCALE.md "Bench variance": ±35 % swings), so a code change is
+measured with the anchored protocol, which separates HOST drift from
+CODE drift:
+
+  (cd FROZEN && python bench.py) > frozen.out   # previous commit
+  python bench.py > current.out                 # this tree
+  python tools/bench_compare.py frozen.out current.out \\
+      --record BENCH_r13.json --out BENCH_sf0.1_r14.json
+
+FROZEN is a checkout of the commit whose committed record is R (e.g.
+``git archive <commit> | tar -x -C FROZEN``). OLD and NEW ran back to
+back on the same host, so their ratios are code ratios; the host
+anchor factor is OLD now over R, the same code's committed record.
+``--out`` writes both records and the summary as one JSON file
+(BENCH_sf0.1_r12.json is the exemplar). Never run the benches while
+pytest or another Spark job is active.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import re
 import statistics
 
 
-def _queries(rec: dict) -> dict[str, float]:
-    q = rec.get("queries_median") or rec.get("queries") or {}
-    if not q and "tail" in rec:
-        # driver-written BENCH_r{N}.json: the bench's one-line JSON is
-        # embedded (possibly head-truncated) in the captured stdout
-        # tail — recover the queries_median block by regex
-        import re
+def load_record(path: str) -> dict | None:
+    """A bench record: a bench.py stdout capture (its one JSON line),
+    repo-format JSON or a round record BENCH_r{N}.json (JSON possibly
+    only in 'tail')."""
+    with open(path) as fh:
+        d = json.load(fh)
+    if "queries" in d:
+        return d
+    if isinstance(d.get("parsed"), dict) and "queries" in d["parsed"]:
+        return d["parsed"]
+    pairs = tail_times(d.get("tail", ""))
+    return {"queries": pairs} if pairs else None
 
-        m = re.search(r'"queries_median": \{([^}]*)\}', rec["tail"])
-        if m is None:
-            # the captured tail can start MID-KEY (head truncation
-            # lands anywhere): accept any suffix of the key name
-            m = re.search(r'eries_median"?: \{([^}]*)\}', rec["tail"])
-        if m is None:
-            m = re.search(r'"queries": \{([^}]*)\}', rec["tail"])
-        if m is not None:
-            q = {
-                k: float(v)
-                for k, v in re.findall(r'"(\w+)": ([0-9.]+)', m.group(1))
-            }
-    return {k: float(v) for k, v in q.items() if isinstance(v, (int, float))}
+
+def tail_times(tail: str) -> dict[str, float]:
+    """Per-query times from the end of a bench JSON line whose head was
+    cut off. A "name": number pair belongs to a per-query map
+    ("queries", "queries_median") when it sits two levels deep, counted
+    back from the line's closing brace; meta keys sit one level deep
+    and per-query ``layers`` keys three. A name in both maps keeps its
+    later value, the median."""
+    tail = tail[: tail.rfind("}") + 1]
+    pairs = {}
+    for m in re.finditer(r'"([a-z0-9_]+)":\s*([0-9.]+)', tail):
+        rest = tail[m.end():]
+        depth = rest.count("}") + rest.count("]") - rest.count("{") - rest.count("[")
+        if depth == 2:
+            pairs[m.group(1)] = float(m.group(2))
+    return pairs
+
+
+def times(rec: dict) -> dict[str, float]:
+    return rec.get("queries_median") or rec["queries"]
+
+
+def summarize(frozen: dict, current: dict, record: dict | None) -> dict:
+    fq, cq = times(frozen), times(current)
+    shared = sorted(set(fq) & set(cq))
+    ratios = {n: round(cq[n] / fq[n], 4) for n in shared if fq[n] > 0}
+    rs = sorted(ratios.values())
+    summary = {
+        "shared_queries": len(shared),
+        "code_ratio_sum": round(
+            sum(cq[n] for n in shared) / sum(fq[n] for n in shared), 4
+        ),
+        "code_ratio_median": round(statistics.median(rs), 4) if rs else None,
+        "code_ratio_worst5": sorted(
+            ratios.items(), key=lambda kv: -kv[1]
+        )[:5],
+    }
+    if record:
+        rq = times(record)
+        rshared = sorted(set(fq) & set(rq))
+        if rshared:
+            summary["host_anchor_factor"] = round(
+                sum(fq[n] for n in rshared) / sum(rq[n] for n in rshared), 4
+            )
+            summary["host_anchor_note"] = (
+                "frozen-code now / same-code committed record; divide raw "
+                "cross-round ratios by this before reading them as code"
+            )
+    return summary
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("old")
     ap.add_argument("new")
-    ap.add_argument(
-        "--anchor",
-        type=float,
-        default=1.0,
-        help="host factor of the NEW record's session (frozen-code "
-        "anchor time / its record); NEW times are divided by this",
-    )
+    ap.add_argument("--record", help="committed record of OLD's code (host factor)")
+    ap.add_argument("--out", help="write both records and the summary here")
     ap.add_argument("--top", type=int, default=15)
     args = ap.parse_args()
 
-    old = _queries(json.load(open(args.old)))
-    new = _queries(json.load(open(args.new)))
-    shared = sorted(set(old) & set(new))
-    if not shared:
-        print("no shared queries")
-        return
+    old, new = load_record(args.old), load_record(args.new)
+    for path, rec in ((args.old, old), (args.new, new)):
+        if rec is None:
+            raise SystemExit(f"{path}: no bench queries found")
+    record = load_record(args.record) if args.record else None
+    summary = summarize(old, new, record)
+    if not summary["shared_queries"]:
+        raise SystemExit("no shared queries")
 
-    rows = []
-    for n in shared:
-        adj = new[n] / args.anchor
-        rows.append((adj / old[n] if old[n] else float("inf"), n, old[n], adj))
-    rows.sort(reverse=True)
-
-    ratios = [r[0] for r in rows]
-    sum_old = sum(r[2] for r in rows)
-    sum_new = sum(r[3] for r in rows)
-    print(
-        f"shared: {len(shared)}  anchor: {args.anchor}  "
-        f"median-of-ratios: {statistics.median(ratios):.3f}  "
-        f"sum ratio: {sum_new / sum_old:.3f}"
+    oq, nq = times(old), times(new)
+    rows = sorted(
+        ((nq[n] / oq[n] if oq[n] else float("inf"), n) for n in set(oq) & set(nq)),
+        reverse=True,
     )
-    print(f"{'ratio':>7}  {'old_s':>8}  {'new_s(adj)':>10}  query")
-    for ratio, name, o, a in rows[: args.top]:
-        print(f"{ratio:7.2f}  {o:8.3f}  {a:10.3f}  {name}")
+    host = summary.get("host_anchor_factor")
+    print(
+        f"shared: {summary['shared_queries']}  "
+        f"median-of-ratios: {summary['code_ratio_median']:.3f}  "
+        f"sum ratio: {summary['code_ratio_sum']:.3f}"
+        + (f"  host factor: {host:.3f}" if host else "")
+    )
+    print(f"{'ratio':>7}  {'old_s':>8}  {'new_s':>8}  query")
+    for ratio, n in rows[: args.top]:
+        print(f"{ratio:7.2f}  {oq[n]:8.3f}  {nq[n]:8.3f}  {n}")
     gained = [r for r in rows if r[0] < 0.9]
     if gained:
         print(f"...and {len(gained)} queries at <0.9x (improved)")
+
+    if args.out:
+        out = {
+            "protocol": "anchored-bench v2 (tools/bench_compare.py)",
+            "summary": summary,
+            "current": new,
+            "frozen": old,
+            "record_source": args.record,
+        }
+        with open(args.out, "w") as fh:
+            json.dump(out, fh, indent=1)
 
 
 if __name__ == "__main__":
