@@ -27,25 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.functions.text import fingerprint, tokens
 from aws_csp_datapipeline_spark.parallelism import ensure_min_parallelism
-
-
-def release_caches(df: DataFrame) -> None:
-    """Unpersist the intermediate caches an operator attached to its
-    result DataFrame.
-
-    ``minhash_lsh_pairs`` persists internal tables (shingle
-    fingerprints, signatures) that the RESULT's first action populates
-    and whose cache later actions on the same result reuse — the
-    caller's first action owns those caches. In a long-lived session
-    running many dedup calls, release them once the result has been
-    actioned (or checkpointed past its lineage) by calling this; a
-    no-op for DataFrames without attached caches. ``neardup_groups``
-    calls it on its input automatically because its eager checkpoints
-    ARE the consuming action."""
-    for cached in getattr(df, "_graft_caches", ()):
-        cached.unpersist(blocking=False)
 
 
 def word_shingles(col, n: int = 3):
@@ -176,9 +160,9 @@ def duplicate_passage_stats(
     # ex feeds the corpus-wide count AND the join back — persist so
     # tokenization + tiling + explode run once (narrow (doc, int64)
     # rows; spillable, same lifecycle as the shingle tables)
-    ex = narrow.select(
+    ex = lifecycle.persist(narrow.select(
         "doc", F.explode(hashed_tiled_spans(F.col("__text"), width)).alias("span")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     counts = ex.groupBy("span").agg(F.count(F.lit(1)).alias("n_occ"))
     return (
         ex.join(counts, "span")
@@ -330,11 +314,8 @@ def ngram_jaccard_pairs(
     # the input text, so memory-only caching would silently recompute
     # the shingling on eviction at corpus scale. The returned plan is
     # lazy, so the consumer's first action materializes the cache;
-    # blocks are released when the plan is garbage-collected (Spark's
-    # ContextCleaner) or the caller unpersists.
-    sh = _shingle_table(df, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # the caller's lifecycle scope releases it.
+    sh = lifecycle.persist(_shingle_table(df, text_col, id_col, n))
     sizes = sh.select("doc", F.size("sh").alias("n_sh"))
     ex = sh.select("doc", F.explode("sh").alias("s"))
     a, b = ex.alias("a"), ex.alias("b")
@@ -381,9 +362,7 @@ def containment_pairs(
     Jaccard band threshold on the size-stratified corpus, and this
     containment check is the exact verifier over those candidates.
     """
-    sh = _shingle_table(df, text_col, id_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = lifecycle.persist(_shingle_table(df, text_col, id_col, n))
     sizes = sh.select("doc", F.size("sh").alias("n_sh"))
     ex = sh.select("doc", F.explode("sh").alias("s"))
     a, b = ex.alias("a"), ex.alias("b")
@@ -725,14 +704,12 @@ def minhash_lsh_pairs(
     # verification shuffle and turn array_intersect into long
     # comparisons (A/B at sf1, warm: full d3 9.2 s → 4.5 s, same
     # 2551 output pairs).
-    sh = _shingle_table(df, text_col, id_col, n, hashed=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = lifecycle.persist(_shingle_table(df, text_col, id_col, n, hashed=True))
     # signatures feed the banding explode AND (with the pre-filter on)
     # both sides of the agreement join — materialize once like sh
     sig = _minhash_array(sh, k)
     if est_prefilter is not None:
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+        sig = lifecycle.persist(sig)
     if bucket_cap == "auto":
         # same gating shape as similarity.auto_semdedup_quantizer:
         # every attested corpus (incl. sf10's exactly-500k docs)
@@ -752,10 +729,10 @@ def minhash_lsh_pairs(
         # signature collisions, which the exact verify re-checks)
         # band once per distinct signature — groupBy, not a window,
         # for the map-side combine (the d10 collapse lesson)
-        groups = sig.groupBy("mhs").agg(
+        groups = lifecycle.persist(sig.groupBy("mhs").agg(
             F.min("doc").alias("doc"),
             F.collect_list("doc").alias("__members"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ))
         band_src = groups
     else:
         band_src = sig
@@ -871,17 +848,9 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    out = verified.select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    # Cache-ownership contract: the caller's first action on `out`
-    # populates sh/sig and later actions reuse them; long-lived
-    # sessions release them via ``release_caches(out)`` once done
-    # (see that helper's docstring). Attached, not leaked.
-    out._graft_caches = (
-        [sh]
-        + ([sig] if est_prefilter is not None else [])
-        + ([groups] if groups is not None else [])
-    )
-    return out
+    # the caller's first action on the result populates sh/sig and
+    # later actions reuse them until its lifecycle scope exits
+    return verified.select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
 
 
 def banding_recommendation(
@@ -994,10 +963,7 @@ def neardup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     # This operator OWNS the consuming actions (the eager checkpoints
     # above), so it releases its cache before returning: the final
     # labels are checkpointed and no longer depend on the edge list.
-    # The input's attached caches (e.g. minhash_lsh_pairs' shingle and
-    # signature tables) are likewise spent once edges materialized.
     edges.unpersist(blocking=False)
-    release_caches(pairs)
     return labels.select(F.col("doc"), F.col("grp").alias("group_id"))
 
 

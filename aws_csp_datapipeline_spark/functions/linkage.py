@@ -77,8 +77,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.exprcache import cached_column
 from aws_csp_datapipeline_spark.parallelism import shuffle_partitions
 
@@ -662,16 +662,8 @@ def _shifted_candidate_name_pairs(
     # lane-construction subtree replays per leg (~6×) — measured 3×
     # wall-clock on the name phase. The frames are DISTINCT-NAME
     # sized (15k names × ~34 short rows here), so MEMORY_AND_DISK is
-    # cheap; they attach to the result as ``_graft_caches`` per the
-    # dedup module's lifecycle contract (the result's first action
-    # populates them; ``dedup.release_caches`` frees them).
-    caches = []
-
-    def cached(frame: DataFrame) -> DataFrame:
-        frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(frame)
-        return frame
-
+    # cheap; the result's first action populates them and the
+    # caller's lifecycle scope frees them.
     from pyspark.sql import Window
 
     # ONE lane frame, ONE shuffle per level (r12): index and probe
@@ -687,7 +679,7 @@ def _shifted_candidate_name_pairs(
     # (~×13 of the index-only window); both the old SMJ and
     # WindowExec buffer via the same spillable row-array, so the
     # degradation mode is unchanged.
-    all1 = cached(
+    all1 = lifecycle.persist(
         laned(idx_lanes + prb_lanes, content_offs)
         .withColumn(
             "n",
@@ -792,7 +784,7 @@ def _shifted_candidate_name_pairs(
         return small, lv2
 
     s1, lv2 = split2(all1)
-    all2 = cached(
+    all2 = lifecycle.persist(
         lv2.withColumn(
             "n2",
             F.count(F.when(F.col("r") == 0, F.lit(1))).over(
@@ -874,15 +866,13 @@ def _shifted_candidate_name_pairs(
     b = legs.filter(F.col("r") == 1).select(
         F.col(name_col).alias("name_b"), "fk"
     )
-    out = (
+    return (
         a.hint("merge")
         .join(b, ["fk"])
         .filter(F.col("name_a") < F.col("name_b"))
         .select(*block_cols, "name_a", "name_b")
         .distinct()
     )
-    out._graft_caches = tuple(caches)
-    return out
 
 
 def pigeonhole_matches(
@@ -969,11 +959,7 @@ def edit_complete_matches(
     same = _same_name_pairs(recs, "_id", "_nm", block_cols).withColumn(
         "dist", F.lit(0)
     )
-    out = expanded.unionByName(same)
-    # carry the candidate generator's caches to the caller-visible
-    # result (dedup.release_caches contract)
-    out._graft_caches = getattr(cand, "_graft_caches", ())
-    return out
+    return expanded.unionByName(same)
 
 
 def edit_match_stats(
@@ -1050,7 +1036,7 @@ def edit_match_stats(
         F.lit(0).alias("dist"),
         (F.col("_cnt") * (F.col("_cnt") - 1) / 2).cast("long").alias("pairs"),
     )
-    out = (
+    return (
         cross.unionByName(same)
         .groupBy(*block_cols)
         .agg(
@@ -1063,5 +1049,3 @@ def edit_match_stats(
             F.sum("pairs").cast("long").alias("pairs_total"),
         )
     )
-    out._graft_caches = getattr(cand, "_graft_caches", ())
-    return out

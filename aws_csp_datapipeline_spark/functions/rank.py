@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from aws_csp_datapipeline_spark import lifecycle
+
 
 # Below this many ranked rows the plain single-partition window wins:
 # the distributed form pays a persist, a broadcast join, and two extra
@@ -72,20 +74,15 @@ def global_row_number(
         return df.withColumn(
             out, F.row_number().over(Window.orderBy(*order))
         )
-    from pyspark.storagelevel import StorageLevel
-
     # The ranged frame feeds two consumers (the rank rows and the
     # offsets); persist it so the source computes ONCE — without the
     # cache a separate branch measured as a second full scan + range
     # shuffle of the input (exchange reuse did not fire under AQE).
     # The cache is the input's width — callers here rank
     # already-aggregated frames (vocab counts, per-customer revenue,
-    # score lists), not raw corpora — and attaches to the result per
-    # the release_caches contract (dedup.release_caches).
-    ranged = (
-        df.repartitionByRange(*order)
-        .withColumn("__grp", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # score lists), not raw corpora.
+    ranged = lifecycle.persist(
+        df.repartitionByRange(*order).withColumn("__grp", F.spark_partition_id())
     )
     # local rank AND group size come from the SAME window stage (same
     # partition key ⇒ one exchange, stacked Window nodes)
@@ -101,13 +98,11 @@ def global_row_number(
     offsets = groups.select(
         "__grp", F.coalesce(F.sum("__gc").over(ow), F.lit(0)).alias("__off")
     )
-    result = (
+    return (
         local.join(F.broadcast(offsets), "__grp")
         .withColumn(out, (F.col("__off") + F.col("__lrn")).cast("int"))
         .drop("__grp", "__lrn", "__gc", "__off")
     )
-    result._graft_caches = (ranged, *getattr(df, "_graft_caches", ()))
-    return result
 
 
 def exact_ntile(
@@ -138,6 +133,4 @@ def exact_ntile(
     tile = F.when(in_big, F.ceil(r / (q + 1))).otherwise(
         rem + F.ceil((r - rem * (q + 1)) / q)
     )
-    result = j.withColumn(out, tile.cast("int")).drop("__gr", "__n")
-    result._graft_caches = getattr(ranked, "_graft_caches", ())
-    return result
+    return j.withColumn(out, tile.cast("int")).drop("__gr", "__n")

@@ -17,8 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.parallelism import ensure_min_parallelism
 
 
@@ -513,8 +513,8 @@ def _cells_and_units(
     trick as dedup.word_shingles: a plain two-step select gets
     collapsed and the norm aggregate re-inlines per element).
     MEMORY_AND_DISK because the table feeds 2-3 consumers per query;
-    held by the session CacheManager until unpersist/clearCache (see
-    SCALE.md "Memory" for the lifecycle contract)."""
+    released when the caller's ``lifecycle.scope()`` exits (outside
+    one, at ``clearCache``)."""
     v = _as_double(F.col(vec_col))
     bucket = None
     for i in range(sign_bits):
@@ -567,11 +567,10 @@ def _cells_and_units(
                 * F.lit(1 << sign_bits).cast("long")
                 + bucket
             )
-    return (
+    return lifecycle.persist(
         src.withColumn("__bucket", bucket)
         .withColumn("__u", unit)
         .select("__id", "__bucket", "__u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
 

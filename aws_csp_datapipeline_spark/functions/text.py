@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aws_csp_datapipeline_spark import lifecycle
+
 # language marker patterns: tiny stopword lexicons as word-boundary
 # alternations. RE2 (DuckDB) and java.util.regex (Spark) agree on this
 # subset of syntax, which keeps the oracle exact.
@@ -242,15 +244,14 @@ def bm25_scores(
     only query-term postings; df and the (N, avgdl) scalars
     broadcast. ``score`` is unrounded — round at the query edge."""
     from pyspark.sql import DataFrame as _DF  # noqa: F401
-    from pyspark.storagelevel import StorageLevel
 
     # dl feeds the avgdl scalar AND the scoring join — persist the
     # narrow (doc_id, int) projection so the per-doc tokenization
     # runs once (honest cold-cache A/B, clearCache before each run:
     # sf0.1 1.0 s → 0.37 s, sf1 1.2 s → 0.63 s, together with the
     # one-aggregate scal below)
-    dl = docs.select("doc_id", token_count(F.col("text")).alias("dl")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    dl = lifecycle.persist(
+        docs.select("doc_id", token_count(F.col("text")).alias("dl"))
     )
     tf = (
         docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))

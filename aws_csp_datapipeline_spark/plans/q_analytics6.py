@@ -87,16 +87,12 @@ def h2_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         o, 10, [F.asc("o_totalprice"), F.asc("o_orderkey")], out="decile",
         n_hint=table_row_count(sf_dir, "orders"),
     )
-    out = binned.groupBy("decile").agg(
+    return binned.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.min("o_totalprice"), 2).alias("lo"),
         F.round(F.max("o_totalprice"), 2).alias("hi"),
         F.round(F.avg("o_totalprice"), 4).alias("mean_price"),
     )
-    # aggregation severs the attribute-based cache handoff — re-attach
-    # so release_caches frees the rank's persisted frame (ADVICE r7)
-    out._graft_caches = getattr(binned, "_graft_caches", ())
-    return out
 
 
 @register(
@@ -530,7 +526,7 @@ def w13_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = rk.crossJoin(
         F.broadcast(per_cust.agg(F.count(F.lit(1)).alias("n")))
     )
-    out = ranked.agg(
+    return ranked.agg(
         F.round(
             2.0 * F.sum(F.col("i") * F.col("rev")) / (F.max("n") * F.sum("rev"))
             - (F.max("n") + 1.0) / F.max("n"),
@@ -538,8 +534,6 @@ def w13_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gini"),
         F.max("n").cast("long").alias("n_customers"),
     )
-    out._graft_caches = getattr(rk, "_graft_caches", ())
-    return out
 
 
 @register(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.catalog import load_table
 from aws_csp_datapipeline_spark.operators import cleaning as C
 from aws_csp_datapipeline_spark.operators import crud as M
@@ -367,10 +368,8 @@ def m11_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     oracle states the expected post-state per partition. At 100 TB
     this is the idempotent daily-refresh primitive: the job rewrites
     one day's directory, never the table."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="m11_dpo_")
+    out = lifecycle.tempdir("m11_dpo_")
     ev.write.partitionBy("event_type").mode("overwrite").parquet(out)
     prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

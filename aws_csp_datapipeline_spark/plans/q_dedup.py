@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.catalog import load_table, table_row_count
 from aws_csp_datapipeline_spark.functions import dedup as D
 from aws_csp_datapipeline_spark.functions import text as X
@@ -797,14 +798,12 @@ def inc4_semdedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted beside the state so the incremental path survives past
     the sign-bit cap, append=True for tomorrow's batch. Temp dir per
     call keeps the query stateless for the driver."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from aws_csp_datapipeline_spark.functions import semdedup_state as SS
 
     e = load_table(spark, sf_dir, "embeddings")
-    sd = tempfile.mkdtemp(prefix="spark_graft_semdedup_state_")
+    sd = lifecycle.tempdir("spark_graft_semdedup_state_")
     SS.build_semdedup_state(
         e.filter(F.col("vec_id") < 250), "embedding", "vec_id", sd,
         threshold=0.45, sign_bits=6, ivf_cells=0,

@@ -295,18 +295,13 @@ def er3_indel_complete_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_dist=2,
         n_rows=table_row_count(sf_dir, "customer"),
     )
-    out = matches.select(
+    return matches.select(
         F.col("id_a").alias("custkey_a"),
         F.col("id_b").alias("custkey_b"),
         "name_a",
         "name_b",
         "dist",
     )
-    # .select() returns a NEW DataFrame, severing the attribute-based
-    # cache handoff — re-attach so dedup.release_caches(plan_result)
-    # can free the persisted lane frames (ADVICE r7).
-    out._graft_caches = getattr(matches, "_graft_caches", ())
-    return out
 
 
 @register(
@@ -411,7 +406,7 @@ def er4_match_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         cap=_ER2_CAP,
         max_dist=2,
     )
-    out = stats.select(
+    return stats.select(
         F.col("c_nationkey").alias("nationkey"),
         F.col("c_mktsegment").alias("mktsegment"),
         "pairs_d0",
@@ -419,8 +414,6 @@ def er4_match_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pairs_d2",
         "pairs_total",
     )
-    out._graft_caches = getattr(stats, "_graft_caches", ())
-    return out
 
 
 @register(

@@ -6,8 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.catalog import load_table, table_row_count
 from aws_csp_datapipeline_spark.functions import sampling as SMP
 from aws_csp_datapipeline_spark.plans.registry import register
@@ -294,11 +294,10 @@ def pipe1_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and semi-join the cached ids instead of re-running the gate.
     # Spread + pin (r12): without them the gate expression evaluates
     # serially in the single scan task of a one-row-group extract.
-    keep_ids = (
+    keep_ids = lifecycle.persist(
         ensure_min_parallelism(docs.select("doc_id", "text"))
         .filter(gate_after_spread(quality_score(F.col("text")) >= 0.35))
         .select("doc_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     keep = docs.join(keep_ids, "doc_id", "left_semi")
     # token_count BEFORE the dedup semi-join (r13 — the pipe4 fix,
@@ -457,10 +456,8 @@ def pipe4_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist the NARROW (doc_id, __q) survivors only — document
     # bodies are never cached (SCALE.md cache policy); downstream
     # consumers re-scan parquet and join the cached keys.
-    gated_keys = (
-        rowgate.select("doc_id", "__q")
-        .join(lmkeep, "doc_id", "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    gated_keys = lifecycle.persist(
+        rowgate.select("doc_id", "__q").join(lmkeep, "doc_id", "left_semi")
     )
     gated = d.select("doc_id", "source", "lang", "text").join(
         gated_keys, "doc_id"
@@ -852,11 +849,10 @@ def pipe6_train_ready(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `keep`, and without the cache the per-row quality expression —
     # the most expensive projection in this plan — ran once PER
     # consumer (4x; measured ~15 s CPU per evaluation at sf0.1).
-    keep_ids = (
+    keep_ids = lifecycle.persist(
         ensure_min_parallelism(d.select("doc_id", "text"))
         .filter(gate_after_spread(quality_score(F.col("text")) >= 0.35))
         .select("doc_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     keep = d.select("doc_id", "lang", "text").join(
         keep_ids, "doc_id", "left_semi"
@@ -976,26 +972,19 @@ def tt15_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so without a persist the distinct train-gram derivation would
     # run twice — once for the build, once for the confirm join.
     # Narrow 8-byte rows, same persist policy as the d1 keep-set.
-    train_g = (
-        grams.filter(F.col("split") == "train")
-        .select("g")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    train_g = lifecycle.persist(
+        grams.filter(F.col("split") == "train").select("g").distinct()
     )
     bloom = SK.bloom_build(train_g, F.col("g"), n_bits=n_bits, k=k)
     words = SK.bloom_dense_words(bloom, n_bits)
     survivors = grams.filter(F.col("split") == "test").filter(
         SK.bloom_contains_expr(words, F.col("g"), n_bits, k)
     )
-    out = (
+    return (
         survivors.join(train_g, "g")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared_grams"))
     )
-    # the dedup-module cache convention: the caller releases the
-    # persisted lane once the result is actioned (release_caches)
-    out._graft_caches = (train_g,)
-    return out
 
 
 @register(
@@ -1110,14 +1099,14 @@ def tt16_moore_lewis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.15× SLOWER at sf0.1 (5-round interleaved A/B) — the extra
     # AQE exchange stages per cache materialization cost more than
     # the serialized explode they remove on this two-cache shape.
-    bg_all = d.select(
+    bg_all = lifecycle.persist(d.select(
         "doc_id",
         "source",
         F.explode(X.bigrams(F.col("text"))).alias("bigram"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    tok_all = d.select(
+    ))
+    tok_all = lifecycle.persist(d.select(
         "source", F.explode(X.tokens(F.col("text"))).alias("tok")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
 
     def model(bg, toks):
         bgc = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c12"))
@@ -1187,14 +1176,12 @@ def tt16_moore_lewis(spark: SparkSession, sf_dir: str) -> DataFrame:
         out="__tile",
         n_hint=table_row_count(sf_dir, "documents"),
     )
-    out = tiled.select(
+    return tiled.select(
         "doc_id",
         "n_bigrams",
         "ce_diff",
         (F.col("__tile") == 1).alias("selected"),
     )
-    out._graft_caches = (bg_all, tok_all, *getattr(tiled, "_graft_caches", ()))
-    return out
 
 
 @register(

@@ -327,7 +327,7 @@ def s10_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_hint=table_row_count(sf_dir, "embeddings"),
     )
     vec = vec_rk.select(F.col("vec_id").alias("doc_id"), "r_vec")
-    out = (
+    return (
         lex.join(vec, "doc_id")
         .select(
             "doc_id",
@@ -338,13 +338,6 @@ def s10_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("rrf"), F.asc("doc_id"))
         .limit(10)
     )
-    # select/join sever the attribute-based cache handoff — re-attach
-    # both ranks' persisted frames for release_caches (ADVICE r7)
-    out._graft_caches = (
-        *getattr(lex_rk, "_graft_caches", ()),
-        *getattr(vec_rk, "_graft_caches", ()),
-    )
-    return out
 
 
 @register(

@@ -10,12 +10,12 @@ on the batch table, so it DOES get an oracle.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.catalog import (
     SCHEMAS,
     load_table,
@@ -73,11 +73,11 @@ def st1_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch min-key dedup — which is the SQL oracle."""
     from aws_csp_datapipeline_spark.operators.crud import dedup_by_keys
 
-    sink_dir = tempfile.mkdtemp(prefix="ingest_sink_")
-    ckpt_dir = tempfile.mkdtemp(prefix="ingest_ckpt_")
+    sink_dir = lifecycle.tempdir("ingest_sink_")
+    ckpt_dir = lifecycle.tempdir("ingest_ckpt_")
     # the file source streams a landing DIRECTORY (the reference's S3
     # prefix); stage the test file into one
-    landing_dir = tempfile.mkdtemp(prefix="ingest_landing_")
+    landing_dir = lifecycle.tempdir("ingest_landing_")
     os.symlink(
         table_path(sf_dir, "events"), os.path.join(landing_dir, "events.parquet")
     )
@@ -133,8 +133,8 @@ def st3_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — which is exactly what the oracle states."""
     from aws_csp_datapipeline_spark.streaming.stateful import running_user_totals
 
-    landing = tempfile.mkdtemp(prefix="st3_landing_")
-    ckpt = tempfile.mkdtemp(prefix="st3_ckpt_")
+    landing = lifecycle.tempdir("st3_landing_")
+    ckpt = lifecycle.tempdir("st3_ckpt_")
     os.symlink(table_path(sf_dir, "events"), os.path.join(landing, "events.parquet"))
 
     stream = _events_stream(spark, landing)
@@ -278,8 +278,8 @@ def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     micros in both engines."""
     from aws_csp_datapipeline_spark.streaming.ingest import attribution_join
 
-    landing = tempfile.mkdtemp(prefix="st4_landing_")
-    ckpt = tempfile.mkdtemp(prefix="st4_ckpt_")
+    landing = lifecycle.tempdir("st4_landing_")
+    ckpt = lifecycle.tempdir("st4_ckpt_")
     os.symlink(table_path(sf_dir, "events"), os.path.join(landing, "events.parquet"))
 
     def typed_stream(event_type: str) -> DataFrame:
@@ -411,7 +411,7 @@ def st7_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r_regionkey").alias("n_regionkey"),
     )
 
-    landing = tempfile.mkdtemp(prefix="st7_changes_")
+    landing = lifecycle.tempdir("st7_changes_")
     batch1 = u1.unionByName(u2)
     batch2 = d.unionByName(i)
     for idx, batch in enumerate([batch1, batch2]):
@@ -553,9 +553,9 @@ def st8_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast while the dim is small, keyed join at scale). Driven
     as a REAL checkpointed availableNow stream into a parquet sink;
     the result is provably the batch join, which is the oracle."""
-    sink_dir = tempfile.mkdtemp(prefix="enrich_sink_")
-    ckpt_dir = tempfile.mkdtemp(prefix="enrich_ckpt_")
-    landing_dir = tempfile.mkdtemp(prefix="enrich_landing_")
+    sink_dir = lifecycle.tempdir("enrich_sink_")
+    ckpt_dir = lifecycle.tempdir("enrich_ckpt_")
+    landing_dir = lifecycle.tempdir("enrich_landing_")
     os.symlink(
         table_path(sf_dir, "events"), os.path.join(landing_dir, "events.parquet")
     )
@@ -594,9 +594,9 @@ def st9_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest of a duplicated feed survive at 100-TB/week rates.
     Rows-only: pytest checks equality with the batch distinct-key
     count (tests/test_sources_streaming.py)."""
-    sink_dir = tempfile.mkdtemp(prefix="wmdedup_sink_")
-    ckpt_dir = tempfile.mkdtemp(prefix="wmdedup_ckpt_")
-    landing_dir = tempfile.mkdtemp(prefix="wmdedup_landing_")
+    sink_dir = lifecycle.tempdir("wmdedup_sink_")
+    ckpt_dir = lifecycle.tempdir("wmdedup_ckpt_")
+    landing_dir = lifecycle.tempdir("wmdedup_landing_")
     os.symlink(
         table_path(sf_dir, "events"), os.path.join(landing_dir, "events.parquet")
     )
@@ -837,8 +837,8 @@ def st11_stream_gate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained result equals the batch GROUP BY, which is the oracle.
     keep_rate is one integer->double division (the ml5 discipline),
     so the hash needs no rounding fold."""
-    landing = tempfile.mkdtemp(prefix="st11_landing_")
-    ckpt = tempfile.mkdtemp(prefix="st11_ckpt_")
+    landing = lifecycle.tempdir("st11_landing_")
+    ckpt = lifecycle.tempdir("st11_ckpt_")
     os.symlink(
         table_path(sf_dir, "events"), os.path.join(landing, "events.parquet")
     )

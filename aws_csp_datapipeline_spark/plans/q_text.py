@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.catalog import load_table, table_row_count
 from aws_csp_datapipeline_spark.functions import text as X
 from aws_csp_datapipeline_spark.plans.registry import register
@@ -369,12 +370,7 @@ def t14_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         # paths are exact, so the hint is purely a performance knob
         n_hint=table_row_count(sf_dir, "documents"),
     )
-    out = ranked.withColumn("token_id", F.col("__rn").cast("long")).drop("__rn")
-    # withColumn/drop return NEW frames, severing the attribute-based
-    # cache handoff (the q_linkage ADVICE-r7 lesson) — re-attach so
-    # release_caches can free the rank's persisted ranged frame
-    out._graft_caches = getattr(ranked, "_graft_caches", ())
-    return out
+    return ranked.withColumn("token_id", F.col("__rn").cast("long")).drop("__rn")
 
 
 # t15's full SQL, exposed so downstream curation queries (t19) can
@@ -433,14 +429,12 @@ def doc_bigram_logprob(d: DataFrame) -> DataFrame:
     # bigram counts, first-word counts) — materialize it once with
     # explicit MEMORY_AND_DISK (same policy as the LSH shingle table:
     # spill, don't recompute the explode on eviction)
-    from pyspark.storagelevel import StorageLevel
-
     from aws_csp_datapipeline_spark.parallelism import ensure_min_parallelism
 
     # the bigram build (regex split + zip) is the per-row-expensive
     # step — spread the narrow (id, text) projection across cores
     # first, or a single-row-group extract runs it on ONE task
-    bg = (
+    bg = lifecycle.persist(
         ensure_min_parallelism(d.select("doc_id", "text"))
         .select("doc_id", F.explode(X.bigrams(F.col("text"))).alias("bigram"))
         .select(
@@ -448,7 +442,6 @@ def doc_bigram_logprob(d: DataFrame) -> DataFrame:
             F.xxhash64("bigram").alias("bh"),
             F.xxhash64(F.substring_index("bigram", " ", 1)).alias("wh"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     bc = bg.groupBy("bh").agg(F.count(F.lit(1)).alias("nb"))
     uc = bg.groupBy("wh").agg(F.count(F.lit(1)).alias("nu"))
@@ -815,7 +808,6 @@ def t25_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-bigrams to the prob table keyed by bigram (the only
     corpus-width shuffle) and one per-doc aggregate. Nothing is
     quadratic; document BODIES never shuffle — only bigram strings."""
-    from pyspark.storagelevel import StorageLevel
 
     from aws_csp_datapipeline_spark.parallelism import ensure_min_parallelism
 
@@ -825,15 +817,14 @@ def t25_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bodies are read once for all bigram consumers (un-persisted,
     # Catalyst re-scans the corpus per consumer: 4 scans measured in
     # PLAN_AUDIT; with the cache it is the bigram TABLE, orders
-    # smaller than the bodies, that feeds every reuse). Caches attach
-    # to the result per the release_caches contract. Spread the
+    # smaller than the bodies, that feeds every reuse). Spread the
     # narrow projection first (r12): on a single-row-group extract
     # the bigram/token explodes otherwise run on ONE task per cache
     # pass (no-op on real multi-row-group layouts).
     nar = ensure_min_parallelism(d.select("doc_id", "text"))
-    bg = nar.select(
+    bg = lifecycle.persist(nar.select(
         "doc_id", F.explode(X.bigrams(F.col("text"))).alias("bigram")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     bgc = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c12"))
     # heads = sum(c12) OVER BGC, not a second stream aggregation —
     # SETTLED r13 (VERDICT r12 item 3): the r12 heads-from-stream
@@ -865,7 +856,7 @@ def t25_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p"),
         )
     )
-    out = (
+    return (
         bg.join(probs, "bigram")
         .groupBy("doc_id")
         .agg(
@@ -873,8 +864,6 @@ def t25_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.pow(F.lit(2.0), -F.avg(F.log2("p"))), 4).alias("ppl"),
         )
     )
-    out._graft_caches = (bg,)
-    return out
 
 
 @register(
@@ -1010,7 +999,7 @@ def t26_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_hint=table_row_count(sf_dir, "documents"),
     )
     tile = F.col("__tile")
-    out = tiled.select(
+    return tiled.select(
         "doc_id",
         "n_bigrams",
         "ppl",
@@ -1019,5 +1008,3 @@ def t26_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("tail")
         .alias("bucket"),
     )
-    out._graft_caches = getattr(tiled, "_graft_caches", ())
-    return out

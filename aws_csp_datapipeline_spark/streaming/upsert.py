@@ -19,11 +19,10 @@ global latest-change-per-key fold — the batch oracle.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.operators.crud import apply_cdc
 
 
@@ -45,7 +44,7 @@ def stream_upsert_cdc(
     the arrival granularity of the reference's S3-notification path
     (one uploaded file ≡ one trigger).
     """
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="upsert_ckpt_")
+    checkpoint = checkpoint_dir or lifecycle.tempdir("upsert_ckpt_")
     # The snapshot is TABLE-scale, so its per-batch materializations
     # go to serialized disk blocks, and each fold drops the superseded
     # batch's blocks — otherwise N micro-batches retain N full-table

@@ -1,0 +1,36 @@
+"""Leak checks: building and forcing a query inside one
+``lifecycle.scope()`` must leave the session as it found it — no
+cached relation, no active stream, no temp dir."""
+
+from __future__ import annotations
+
+import tempfile
+from contextlib import contextmanager
+
+import pytest
+
+from aws_csp_datapipeline_spark import lifecycle
+from aws_csp_datapipeline_spark.functions import artifact_cache
+
+
+def cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@contextmanager
+def leaves_nothing(spark, tmp_dir, what: str):
+    """Run the body in a fresh scope with ``tempfile`` pointed at the
+    new, empty ``tmp_dir``; after the scope exits, assert the session
+    holds nothing the body made. The artifact cache stays where it
+    was: it is a deliberate cross-call cache, not a leak."""
+    spark.catalog.clearCache()
+    tmp_dir.mkdir()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_ARTIFACT_DIR", artifact_cache.cache_base())
+        mp.setattr(tempfile, "tempdir", str(tmp_dir))
+        with lifecycle.scope():
+            yield
+    assert cache_is_empty(spark), f"{what}: left a cached relation"
+    assert not spark.streams.active, f"{what}: left an active stream"
+    left = sorted(p.name for p in tmp_dir.iterdir())
+    assert not left, f"{what}: left temp entries {left}"

@@ -274,29 +274,28 @@ def test_er2_candidate_budget_stays_linear(spark):
 
 
 def test_er3_plan_result_carries_cache_handle(spark, sf_oracle):
-    """ADVICE r7: the registered er3 plan's final .select() used to
-    sever the _graft_caches attribute, leaking the four persisted lane
-    frames per invocation. The plan result must expose them so
-    dedup.release_caches(result) actually unpersists."""
-    from aws_csp_datapipeline_spark.functions.dedup import release_caches
+    """ADVICE r7: er3 used to leak its persisted lane frames once its
+    final .select() severed the hand-propagated cache attribute. The
+    lane frames now belong to the caller's lifecycle scope: cached
+    while it is open, gone after it exits."""
+    from aws_csp_datapipeline_spark import lifecycle
     from aws_csp_datapipeline_spark.plans.q_linkage import (
         er3_indel_complete_matches,
     )
+    from tests.leaks import cache_is_empty
 
-    out = er3_indel_complete_matches(spark, sf_oracle)
-    caches = getattr(out, "_graft_caches", ())
-    assert len(caches) > 0, "plan result lost the cache handoff"
-    out.count()  # materialize (populates the persisted lanes)
-    release_caches(out)
-    for cached in caches:
-        assert not cached.is_cached, "release_caches left a lane persisted"
+    spark.catalog.clearCache()
+    with lifecycle.scope():
+        er3_indel_complete_matches(spark, sf_oracle).count()
+        assert not cache_is_empty(spark), "er3 persisted no lane frame"
+    assert cache_is_empty(spark), "scope exit left a lane persisted"
 
 
 def test_er4_stats_equal_full_ground_truth_at_sf01(spark):
     """er4's counts vs the unlimited quadratic join's aggregate at
     sf0.1 (the oracle pairing covers sf0.01; this pins the larger
     corpus where blocks overflow the cap and the split lanes engage)."""
-    from aws_csp_datapipeline_spark.functions.dedup import release_caches
+    from aws_csp_datapipeline_spark import lifecycle
     from aws_csp_datapipeline_spark.plans.q_linkage import er4_match_stats
 
     c = load_table(spark, SF_BIG, "customer").select(
@@ -322,10 +321,9 @@ def test_er4_stats_equal_full_ground_truth_at_sf01(spark):
             F.count(F.lit(1)).alias("pairs_total"),
         )
     )
-    got = er4_match_stats(spark, SF_BIG)
     t = {tuple(r) for r in truth.collect()}
-    g = {tuple(r) for r in got.collect()}
-    release_caches(got)
+    with lifecycle.scope():
+        g = {tuple(r) for r in er4_match_stats(spark, SF_BIG).collect()}
     assert g == t
 
 

@@ -72,7 +72,7 @@ def test_plan_build_is_lazy(spark, name, n_reads, sf_oracle):
     per build — which now comes from the parquet footer via
     catalog.table_row_count (zero jobs). A regression re-adding an
     eager action shows up as jobs > n_reads here."""
-    from aws_csp_datapipeline_spark.functions.dedup import release_caches
+    from aws_csp_datapipeline_spark import lifecycle
     from aws_csp_datapipeline_spark.plans import registry
 
     qs = {s.name: s.fn for s in registry.specs()}
@@ -80,7 +80,8 @@ def test_plan_build_is_lazy(spark, name, n_reads, sf_oracle):
     group = f"lazy-build-{name}"
     sc.setJobGroup(group, "plan-build laziness gate")
     try:
-        df = qs[name](spark, sf_oracle)
+        with lifecycle.scope():
+            qs[name](spark, sf_oracle)
     finally:
         sc.setJobGroup(None, None)
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
@@ -88,7 +89,6 @@ def test_plan_build_is_lazy(spark, name, n_reads, sf_oracle):
         f"{name}: plan BUILD launched {len(jobs)} jobs (> {n_reads} "
         "table-schema reads) — an eager action is hiding in the builder"
     )
-    release_caches(df)
 
 
 def test_table_row_count_ignores_staging_files(spark, tmp_path):

@@ -74,15 +74,13 @@ def test_bucketed_join_has_no_shuffle(spark, sf_oracle):
         spark.sql("DROP TABLE IF EXISTS b_customer")
 
 
-def test_partition_pruning(spark, sf_oracle):
+def test_partition_pruning(spark, sf_oracle, tmp_path):
     """Writing partitioned-by-day and filtering on the partition
     column must prune at planning time (PartitionFilters on the scan,
     only matching partition directories read)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    out = tempfile.mkdtemp(prefix="part_events_")
+    out = str(tmp_path / "part_events")
     from aws_csp_datapipeline_spark.catalog import load_table
 
     ev = load_table(spark, sf_oracle, "events").withColumn(

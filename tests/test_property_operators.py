@@ -746,18 +746,18 @@ def test_semdedup_ivf_path_preserves_null_vector_rows(spark):
     assert got[200]["kept"] is True and got[201]["kept"] is False
 
 
-def test_lm_perplexity_orders_fluent_below_noise(spark):
+def test_lm_perplexity_orders_fluent_below_noise(spark, tmp_path):
     """t25's model contract on a planted corpus: documents made of
     the corpus's dominant bigrams score LOWER perplexity than a
     document of bigrams seen nowhere else (smoothing floor), and
     n_bigrams = token count - 1."""
     from aws_csp_datapipeline_spark.plans.registry import queries
-    import tempfile, os
+    import os
 
     rows = [(i, "the cat sat on the mat", "src") for i in range(20)]
     rows.append((100, "zq xv qj kw zq xv", "src"))
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    sf_dir = tempfile.mkdtemp(prefix="t25_corpus_")
+    sf_dir = str(tmp_path)
     df.write.mode("overwrite").parquet(os.path.join(sf_dir, "documents.parquet"))
 
     out = {
@@ -773,21 +773,21 @@ def test_lm_perplexity_orders_fluent_below_noise(spark):
     assert len({out[i][1] for i in range(20)}) == 1
 
 
-def test_ccnet_buckets_oov_floor_and_terciles(spark):
+def test_ccnet_buckets_oov_floor_and_terciles(spark, tmp_path):
     """t26's out-of-vocabulary contract on a planted corpus: a target
     document made of reference bigrams lands in 'head', one with
     bigrams the reference never saw lands in 'tail' (its probability
     is the smoothing floor, never dropped by the join), and the
     terciles partition all scored docs."""
     from aws_csp_datapipeline_spark.plans.registry import queries
-    import tempfile, os
+    import os
 
     rows = [(i, "the cat sat on the mat", "src0") for i in range(10)]
     rows += [(100, "the cat sat on the mat", "srcX"),
              (101, "qq ww ee rr tt yy", "srcX"),
              (102, "the cat sat qq ww ee", "srcX")]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    sf_dir = tempfile.mkdtemp(prefix="t26_corpus_")
+    sf_dir = str(tmp_path)
     df.write.mode("overwrite").parquet(os.path.join(sf_dir, "documents.parquet"))
 
     out = {r["doc_id"]: r for r in queries()["t26_ccnet_buckets"](spark, sf_dir).collect()}
@@ -798,14 +798,13 @@ def test_ccnet_buckets_oov_floor_and_terciles(spark):
     assert out[101]["n_bigrams"] == 5      # OOV bigrams are NOT dropped
 
 
-def test_ccnet_buckets_tile_formula_on_heavy_ties(spark):
+def test_ccnet_buckets_tile_formula_on_heavy_ties(spark, tmp_path):
     """The two-phase distributed NTILE in t26 must match DuckDB's
     NTILE exactly when one ppl value straddles tercile boundaries:
     9 identical-text target docs (one tie group) split 3/3/3 across
     head/middle/tail by doc_id — the intra-value row_number and the
     closed-form bucket expression carry the whole assignment."""
     import os
-    import tempfile
 
     import duckdb
 
@@ -814,7 +813,7 @@ def test_ccnet_buckets_tile_formula_on_heavy_ties(spark):
     rows = [(i, "the cat sat on the mat", "src0") for i in range(5)]
     rows += [(100 + j, "the cat sat on the mat", "srcX") for j in range(9)]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    sf_dir = tempfile.mkdtemp(prefix="t26_ties_")
+    sf_dir = str(tmp_path)
     df.write.mode("overwrite").parquet(os.path.join(sf_dir, "documents.parquet"))
 
     got = {

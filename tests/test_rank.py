@@ -103,18 +103,18 @@ def test_n_hint_dispatch(spark):
 
 
 def test_cache_handoff_contract(spark):
-    """The distributed path persists the ranged frame and hands it to
-    the caller via _graft_caches (the release_caches contract); the
-    window path attaches nothing. release_caches unpersists it."""
-    from aws_csp_datapipeline_spark.functions.dedup import release_caches
+    """The distributed path persists its ranged frame into the active
+    lifecycle scope; the window path persists nothing; the scope's
+    exit leaves the CacheManager empty."""
+    from aws_csp_datapipeline_spark import lifecycle
+    from tests.leaks import cache_is_empty
 
+    spark.catalog.clearCache()
     df = _corpus(spark)
     order = [F.asc("v"), F.asc("id")]
-    dist = global_row_number(df, order)
-    assert len(dist._graft_caches) == 1
-    dist.count()
-    cached = dist._graft_caches[0]
-    assert cached.storageLevel.useMemory or cached.storageLevel.useDisk
-    release_caches(dist)
-    small = global_row_number(df, order, n_hint=10)
-    assert getattr(small, "_graft_caches", ()) == ()
+    with lifecycle.scope():
+        global_row_number(df, order, n_hint=10).count()
+        assert cache_is_empty(spark)
+        global_row_number(df, order).count()
+        assert not cache_is_empty(spark)
+    assert cache_is_empty(spark)

@@ -5,6 +5,7 @@ the same check the driver's correctness gate performs.
 import pytest
 
 from aws_csp_datapipeline_spark.plans import registry
+from tests.leaks import leaves_nothing
 from tests.oracle import compare
 
 SPECS = [s for s in registry.specs() if s.oracle is not None]
@@ -18,18 +19,16 @@ def _sf_of(sf_dir: str) -> float:
 
 
 @pytest.mark.parametrize("spec", SPECS, ids=[s.name for s in SPECS])
-def test_oracle_match(spark, sf_oracle, spec):
-    from aws_csp_datapipeline_spark.functions.dedup import release_caches
-
-    df = spec.fn(spark, sf_oracle)
-    if spec.oracle_sf_max is not None and _sf_of(sf_oracle) > spec.oracle_sf_max:
-        # Outside the oracle's documented exactness window (e.g. a15's
-        # GK sketch beyond ≤accuracy-rows groups): downgrade to a
-        # rows-only run instead of reporting a spurious mismatch.
-        assert df.count() >= 0, spec.name
-    else:
-        compare(df, spec.oracle, sf_oracle)
-    release_caches(df)  # don't accumulate persisted lanes across 240+ cases
+def test_oracle_match(spark, sf_oracle, spec, tmp_path):
+    with leaves_nothing(spark, tmp_path / "tmp", spec.name):
+        df = spec.fn(spark, sf_oracle)
+        if spec.oracle_sf_max is not None and _sf_of(sf_oracle) > spec.oracle_sf_max:
+            # Outside the oracle's documented exactness window (e.g. a15's
+            # GK sketch beyond ≤accuracy-rows groups): downgrade to a
+            # rows-only run instead of reporting a spurious mismatch.
+            assert df.count() >= 0, spec.name
+        else:
+            compare(df, spec.oracle, sf_oracle)
 
 
 def test_entry_smoke(spark, sf_smoke):
@@ -39,11 +38,8 @@ def test_entry_smoke(spark, sf_smoke):
     assert df.count() > 0
 
 
-def test_rows_only_queries_run(spark, sf_smoke):
-    from aws_csp_datapipeline_spark.functions.dedup import release_caches
-
+def test_rows_only_queries_run(spark, sf_smoke, tmp_path):
     for s in registry.specs():
         if s.oracle is None:
-            df = s.fn(spark, sf_smoke)
-            assert df.count() >= 0, s.name
-            release_caches(df)
+            with leaves_nothing(spark, tmp_path / s.name, s.name):
+                assert s.fn(spark, sf_smoke).count() >= 0, s.name

@@ -111,25 +111,6 @@ def test_orc_roundtrip(spark, sf_smoke):
         )
 
 
-def test_gated_formats_raise_cleanly(spark, sf_smoke):
-    import pytest as _pytest
-
-    from aws_csp_datapipeline_spark.sources.formats import (
-        read_avro,
-        read_kafka_stream,
-        write_delta,
-    )
-
-    with tempfile.TemporaryDirectory() as d:
-        nation = spark.read.parquet(f"{sf_smoke}/nation.parquet")
-        with _pytest.raises(NotImplementedError, match="avro"):
-            read_avro(spark, f"{d}/nope.avro")
-        with _pytest.raises(NotImplementedError, match="delta"):
-            write_delta(nation, f"{d}/delta_out")
-        with _pytest.raises(NotImplementedError, match="kafka"):
-            read_kafka_stream(spark, "localhost:9092", "t")
-
-
 def test_multimodal_features_shape(spark, sf_smoke):
     from aws_csp_datapipeline_spark.plans.registry import queries
 

@@ -42,6 +42,7 @@ def zero_cells(rows, cols):
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    from aws_csp_datapipeline_spark import lifecycle
     from aws_csp_datapipeline_spark.plans import registry
     from aws_csp_datapipeline_spark.session import get_spark
     from tests.oracle import duck_connection
@@ -54,9 +55,10 @@ def main() -> None:
         if s.oracle_sf_max is not None and s.oracle_sf_max < 0.01:
             continue
         try:
-            sdf = s.fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            with lifecycle.scope():
+                sdf = s.fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
             rel = con.sql(s.oracle)
             dcols = list(rel.columns)
             drows = rel.fetchall()
@@ -80,9 +82,6 @@ def main() -> None:
             )
         if (i + 1) % 25 == 0:
             print(f"-- {i + 1}/{len(specs)} done", flush=True)
-        from aws_csp_datapipeline_spark.functions.dedup import release_caches
-
-        release_caches(sdf)
     print(f"DONE: {flagged} queries with exact-zero float cells", flush=True)
 
 

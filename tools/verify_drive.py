@@ -48,6 +48,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as e
+    from aws_csp_datapipeline_spark import lifecycle
 
     print("entry rows:", e.entry(spark).count())
     qs, osql = e.queries(), e.oracle_sql()
@@ -68,11 +69,10 @@ def main() -> int:
     bad = 0
     for name in names:
         try:
-            df = qs[name](spark, args.sf_dir)
-            rows = sorted(map(tuple, df.collect()), key=str)
-            from aws_csp_datapipeline_spark.functions.dedup import release_caches
-
-            release_caches(df)  # free any operator-persisted lane frames
+            # free the lane's persisted frames and temp dirs after collect
+            with lifecycle.scope():
+                df = qs[name](spark, args.sf_dir)
+                rows = sorted(map(tuple, df.collect()), key=str)
         except Exception as exc:  # a query that cannot run is a failure
             bad += 1
             print(f"{name}: ERROR {type(exc).__name__}: {str(exc)[:200]}")
