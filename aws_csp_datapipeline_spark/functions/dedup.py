@@ -950,12 +950,11 @@ def neardup_groups(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             )
         )
         prev_labels = labels
-        labels = new_labels.localCheckpoint(eager=True)
+        labels = lifecycle.checkpoint(new_labels)
         # Drop the superseded round's checkpoint blocks eagerly: at
         # corpus scale the label frame is doc-count-sized and 20
         # retained rounds would hold 20 copies (the kcore lesson).
-        if prev_sum is not None:
-            prev_labels.unpersist()
+        lifecycle.release_checkpoint(prev_labels)
         cur_sum = labels.agg(F.sum("grp")).first()[0]
         if cur_sum == prev_sum:
             break

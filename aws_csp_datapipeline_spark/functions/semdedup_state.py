@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.functions.similarity import (
     _as_double,
     _cells_and_units,
@@ -281,9 +282,7 @@ def incremental_from_state(
         # frame is batch-scale WITH the embedding payload (__unit), so
         # a production-sized increment doesn't belong in deserialized
         # heap blocks (the r12 iterative-lane discipline).
-        out = out.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
+        out = lifecycle.checkpoint(out, storage_level=StorageLevel.DISK_ONLY)
         accepted = out.filter(F.col("accepted")).select(
             F.col(meta["id_col"]).alias("id"),
             "bucket",

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from aws_csp_datapipeline_spark import lifecycle
+
 
 def _pin_edges(df: DataFrame) -> DataFrame:
     """Materialize an edge-scale frame with DISK_ONLY blocks.
@@ -53,7 +55,7 @@ def _pin_edges(df: DataFrame) -> DataFrame:
         if sc.getCheckpointDir() is None:
             sc.setCheckpointDir(ckdir)
         return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    return lifecycle.checkpoint(df, storage_level=StorageLevel.DISK_ONLY)
 
 
 def co_occurrence_edges(
@@ -312,8 +314,8 @@ def pagerank(
                 "node", (F.lit(base) + damping * F.col("mass")).alias("pr")
             )
         )
-        ranks = ranks.localCheckpoint(eager=True)
-        prev.unpersist()
+        ranks = lifecycle.checkpoint(ranks)
+        lifecycle.release_checkpoint(prev)
     return ranks
 
 
@@ -335,9 +337,12 @@ def kcore(edges: DataFrame, k: int, max_iters: int = 50) -> DataFrame:
     cur = _pin_edges(sym)
     for _ in range(max_iters):
         deg = cur.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
-        drop = deg.filter(F.col("degree") < k).select("node").localCheckpoint()
+        drop = lifecycle.checkpoint(
+            deg.filter(F.col("degree") < k).select("node"), eager=False
+        )
         n_drop = drop.count()
         if n_drop == 0:
+            lifecycle.release_checkpoint(drop)
             return deg
         # The to-drop set is node-sized while cur is edge-sized; the
         # fixpoint probe just paid for |drop|, so the broadcast
@@ -353,10 +358,11 @@ def kcore(edges: DataFrame, k: int, max_iters: int = 50) -> DataFrame:
             .join(d.withColumnRenamed("node", "nbr"), "nbr", "left_anti")
         )
         # The peel keeps only the newest snapshot: superseded rounds'
-        # blocks are dropped eagerly rather than waiting on the
-        # ContextCleaner, so total footprint is O(|E|) disk, not
-        # O(rounds x |E|).
-        prev.unpersist()
+        # blocks (and the drop set the new one was cut with) are
+        # dropped eagerly rather than waiting on the ContextCleaner, so
+        # total footprint is O(|E|) disk, not O(rounds x |E|).
+        lifecycle.release_checkpoint(prev)
+        lifecycle.release_checkpoint(drop)
     return cur.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.catalog import load_table
 from aws_csp_datapipeline_spark.operators import graph as G
 from aws_csp_datapipeline_spark.plans.registry import register
@@ -183,13 +184,13 @@ def gr4_hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("c_custkey") / 10).cast("long").alias("parent"),
         )
     )
-    e = e.localCheckpoint(eager=True)
-    frontier = e.select(
+    e = lifecycle.checkpoint(e)
+    frontier = lifecycle.checkpoint(e.select(
         "node", F.col("parent").alias("anc"), F.lit(1).cast("long").alias("depth")
-    ).localCheckpoint(eager=True)
+    ))
     levels = [frontier]
     while True:
-        nxt = (
+        nxt = lifecycle.checkpoint(
             frontier.join(e.select(F.col("node").alias("anc"),
                                    F.col("parent").alias("next_anc")), "anc")
             .select(
@@ -197,7 +198,6 @@ def gr4_hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("next_anc").alias("anc"),
                 (F.col("depth") + 1).alias("depth"),
             )
-            .localCheckpoint(eager=True)
         )
         if nxt.isEmpty():
             break

@@ -139,9 +139,10 @@ def st3_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = _events_stream(spark, landing)
     out = running_user_totals(stream.select("user_id", "value"))
+    sink = lifecycle.view_name(spark, "st3_totals")
     q = (
         out.writeStream.format("memory")
-        .queryName("st3_totals")
+        .queryName(sink)
         .outputMode("update")
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -153,7 +154,7 @@ def st3_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.table("st3_totals")
+        spark.table(sink)
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(
@@ -289,9 +290,10 @@ def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     joined = attribution_join(typed_stream("purchase"), typed_stream("click"))
+    sink = lifecycle.view_name(spark, "st4_attributed")
     q = (
         joined.writeStream.format("memory")
-        .queryName("st4_attributed")
+        .queryName(sink)
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -299,7 +301,7 @@ def st4_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     return (
-        spark.table("st4_attributed")
+        spark.table(sink)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_attributed"))
     )
@@ -850,16 +852,17 @@ def st11_stream_gate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_kept"),
     )
+    sink = lifecycle.view_name(spark, "st11_gate")
     q = (
         agg.writeStream.format("memory")
-        .queryName("st11_gate")
+        .queryName(sink)
         .outputMode("complete")
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    return spark.table("st11_gate").select(
+    return spark.table(sink).select(
         "event_type",
         "n_events",
         "n_kept",

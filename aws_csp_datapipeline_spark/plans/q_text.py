@@ -601,12 +601,11 @@ def t16_sentence_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 idx += 1
 
     d = load_table(spark, sf_dir, "documents")
-    # lateral-join the UDTF over the documents relation
-    d.createOrReplaceTempView("__t16_docs")
     spark.udtf.register("sentence_split", SentenceSplit)
+    # lateral-join the UDTF over the documents relation; ``{d}`` binds
+    # the frame under a per-call view that spark.sql drops on return
     return spark.sql(
-        "SELECT s.* FROM __t16_docs d, "
-        "LATERAL sentence_split(d.doc_id, d.text) s"
+        "SELECT s.* FROM {d} d, LATERAL sentence_split(d.doc_id, d.text) s", d=d
     )
 
 

@@ -51,9 +51,7 @@ def stream_upsert_cdc(
     # copies on the heap (the r12 iterative-lane discipline,
     # SCALE.md "gr3/gr5 at sf100").
     state = {
-        "snap": snapshot.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
+        "snap": lifecycle.checkpoint(snapshot, storage_level=StorageLevel.DISK_ONLY)
     }
 
     stream = (
@@ -75,7 +73,7 @@ def stream_upsert_cdc(
         state["snap"] = merged.localCheckpoint(
             eager=True, storageLevel=StorageLevel.DISK_ONLY
         )
-        prev.unpersist()
+        lifecycle.release_checkpoint(prev)
 
     q = (
         stream.writeStream.foreachBatch(fold)
@@ -84,4 +82,5 @@ def stream_upsert_cdc(
         .start()
     )
     q.awaitTermination()
-    return state["snap"]
+    # fold ran on the stream's callback thread, outside the scope
+    return lifecycle.release_at_exit(state["snap"])

@@ -1,6 +1,7 @@
 """Leak checks: building and forcing a query inside one
 ``lifecycle.scope()`` must leave the session as it found it — no
-cached relation, no active stream, no temp dir."""
+cached relation, no persistent RDD (a ``localCheckpoint`` included),
+no catalog table or view, no active stream, no temp dir."""
 
 from __future__ import annotations
 
@@ -17,6 +18,18 @@ def cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def persistent_rdds(spark) -> set[int]:
+    """Ids of the RDDs holding blocks: cached relations' and
+    checkpoints'. An id that was already there may leave during a
+    body (JVM GC lets the ContextCleaner drop an unreferenced one);
+    a new one that stays is the body's."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def catalog_tables(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables()}
+
+
 @contextmanager
 def leaves_nothing(spark, tmp_dir, what: str):
     """Run the body in a fresh scope with ``tempfile`` pointed at the
@@ -25,12 +38,16 @@ def leaves_nothing(spark, tmp_dir, what: str):
     was: it is a deliberate cross-call cache, not a leak."""
     spark.catalog.clearCache()
     tmp_dir.mkdir()
+    rdds, tables = persistent_rdds(spark), catalog_tables(spark)
     with pytest.MonkeyPatch.context() as mp:
         mp.setenv("SPARK_GRAFT_ARTIFACT_DIR", artifact_cache.cache_base())
         mp.setattr(tempfile, "tempdir", str(tmp_dir))
         with lifecycle.scope():
             yield
     assert cache_is_empty(spark), f"{what}: left a cached relation"
+    left_rdds = persistent_rdds(spark) - rdds
+    assert not left_rdds, f"{what}: left persistent RDDs {sorted(left_rdds)}"
+    assert catalog_tables(spark) == tables, f"{what}: changed the catalog"
     assert not spark.streams.active, f"{what}: left an active stream"
     left = sorted(p.name for p in tmp_dir.iterdir())
     assert not left, f"{what}: left temp entries {left}"

@@ -1,14 +1,16 @@
 """bench.py's warm/cold contract: every sample starts cold. After a
-forced run and ``clearCache()`` nothing is persisted — no RDD in
-``getPersistentRDDs()`` and an empty CacheManager — so a later rep
-cannot be served from an earlier one, and a rebuild reproduces the
-first run's hash."""
+forced run and ``clearCache()`` nothing the sample made is persisted —
+no new RDD in ``getPersistentRDDs()`` and an empty CacheManager — so a
+later rep cannot be served from an earlier one, and a rebuild
+reproduces the first run's hash. (An RDD an earlier test left for JVM
+GC to collect is not the sample's.)"""
 
 from __future__ import annotations
 
 import pytest
 
 import bench
+from tests.leaks import persistent_rdds
 
 
 @pytest.mark.parametrize("name", bench.HEADLINE)
@@ -17,9 +19,10 @@ def test_sample_leaves_nothing_cached(spark, sf_smoke, name):
 
     fn = queries()[name]
     spark.catalog.clearCache()
+    before = persistent_rdds(spark)
     _, first = bench.force(fn(spark, sf_smoke))
     spark.catalog.clearCache()
-    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert not persistent_rdds(spark) - before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     _, again = bench.force(fn(spark, sf_smoke))
     spark.catalog.clearCache()

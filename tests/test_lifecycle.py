@@ -3,7 +3,7 @@ import os
 import pytest
 
 from aws_csp_datapipeline_spark import lifecycle
-from tests.leaks import cache_is_empty
+from tests.leaks import cache_is_empty, catalog_tables, persistent_rdds
 
 
 def test_scope_releases_frames_and_dirs_even_on_error(spark):
@@ -29,3 +29,26 @@ def test_outside_a_scope_nothing_is_released(spark):
     finally:
         df.unpersist()
         os.rmdir(d)
+
+
+def test_scope_frees_checkpoints_and_drops_views(spark):
+    before = persistent_rdds(spark)
+    with lifecycle.scope():
+        lifecycle.checkpoint(spark.range(10))
+        name = lifecycle.view_name(spark, "lifecycle_test")
+        spark.range(3).createOrReplaceTempView(name)
+        assert persistent_rdds(spark) - before
+        assert name in catalog_tables(spark)
+    assert not persistent_rdds(spark) - before
+    assert name not in catalog_tables(spark)
+
+
+def test_release_checkpoint_frees_what_unpersist_leaves(spark):
+    before = persistent_rdds(spark)
+    df = spark.range(100).localCheckpoint(eager=True)
+    df.unpersist()
+    spark.catalog.clearCache()
+    assert persistent_rdds(spark) - before
+    lifecycle.release_checkpoint(df)
+    assert not persistent_rdds(spark) - before
+    lifecycle.release_checkpoint(spark.range(3))  # any other frame: a no-op
