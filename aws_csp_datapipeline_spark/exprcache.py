@@ -8,8 +8,9 @@ either way the IDENTICAL tree is rebuilt on every plan construction
 build time, pure driver work under guide §5). A Column is an
 immutable wrapper over an unresolved JVM expression tree, so a tree
 that references nothing caller-specific (literal params arrays,
-literal variant maps, lane-key SQL keyed only by static column
-names) can be built once per JVM and reused by every plan.
+literal sign matrices, band-key arrays) can be built once per JVM and
+reused by every plan. A builder that emits its whole plan as SQL text
+(``functions/linkage.py``) needs none of this.
 
 Cache entries belong to the py4j gateway they were built on: if the
 JVM gateway is ever torn down and relaunched, the cache is emptied,

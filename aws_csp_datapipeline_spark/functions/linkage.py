@@ -79,12 +79,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aws_csp_datapipeline_spark import lifecycle
-from aws_csp_datapipeline_spark.exprcache import cached_column
 from aws_csp_datapipeline_spark.parallelism import shuffle_partitions
 
-# Unit separator: cannot appear in the key fields it joins (documented
-# caller contract — names containing \x1f would need a different sep).
-_SEP = "\x1f"
+# Lane keys join their fields with the unit separator chr(31), which
+# cannot appear in the key fields it joins (documented caller
+# contract — names containing \x1f would need a different sep).
 
 # Unpinned complement positions per bigram index j (1-based): B_j pins
 # comp[2j+1 .. 2j+2], the other four single chars re-pigeonhole
@@ -92,127 +91,69 @@ _SEP = "\x1f"
 _UNPINNED = {0: (3, 4, 5, 6), 1: (1, 2, 5, 6), 2: (1, 2, 3, 4)}
 
 
-def _candidate_name_pairs(
-    df: DataFrame,
-    name_col: str,
-    block_cols: list[str],
-    cap: int,
-) -> DataFrame:
-    """Distinct candidate name pairs (block_cols..., name_a, name_b),
-    name_a < name_b, from pigeonhole lanes over the DISTINCT
-    (block, name) representatives of ``df`` (module docstring)."""
-    names = df.select(*block_cols, name_col).distinct()
-    # Spread the per-name lane construction (r12): the distinct's
-    # output is bytes-tiny relative to its downstream ×9 lane
-    # explosion, so AQE (rightly, by bytes) coalesces it — on the
-    # single-row-group local extract to ONE partition, serializing
-    # the lane substring/concat work (measured 1.4 s single-task at
-    # sf0.1). An explicit round-robin spread of the pre-explosion
-    # frame costs ≤1/9 of the adjacent unavoidable lane shuffle at
-    # any scale and keeps the explosion parallel under any layout
-    # (the _expand_to_ids precedent; explicit repartitions are exempt
-    # from AQE re-coalescing).
-    names = names.repartition(shuffle_partitions(df.sparkSession))
+def _q(col: str) -> str:
+    return f"`{col}`"
 
-    # Shared lane-key sub-expressions (r13, guide §1.2 — the er3
-    # treatment applied to the aligned lanes): the 9 lane structs
-    # re-derived the block casts + length string 9×, the suffix
-    # window per piece, and each complement per bigram/xs extract.
-    # Two stacked projections below the explode compute the prefix +
-    # suffix once, then the 3 triples + 3 complements from the
-    # suffix; each lane key is then a 6-piece concat_ws of
-    # precomputed columns and each xs entry a 1-char substring of a
-    # precomputed complement. CollapseProject cannot re-inline them
-    # (non-cheap aliases referenced more than once). Key bytes are
-    # unchanged: concat_ws(s, concat_ws(s, blocks…, L), t, …) ==
-    # concat_ws(s, blocks…, L, t, …) for non-null fields (the
-    # all-NULL-block corner is a consistent key remap; candidates
-    # are levenshtein-verified downstream regardless). The parsed
-    # trees are memoized per (name_col, block_cols) — exprcache.
-    _nm = f"`{name_col}`"
-    _blocks_sql = ", ".join(f"cast(`{b}` as string)" for b in block_cols)
-    ckey = (name_col, tuple(block_cols))
-    shared1 = {
-        "_g_pre": (
-            f"concat_ws(chr(31), {_blocks_sql},"
-            f" cast(length({_nm}) as string))"
-        ),
-        "_g_s": f"substring({_nm}, greatest(1, length({_nm}) - 8), 9)",
-    }
-    shared2 = {
-        "_g_tr0": "substring(_g_s, 1, 3)",
-        "_g_tr1": "substring(_g_s, 4, 3)",
-        "_g_tr2": "substring(_g_s, 7, 3)",
-        "_g_cp0": "substring(_g_s, 4, 6)",
-        "_g_cp1": "concat(substring(_g_s, 1, 3), substring(_g_s, 7, 3))",
-        "_g_cp2": "substring(_g_s, 1, 6)",
-    }
-    lane_sqls = []
+
+def _cols(cols, alias: str = "") -> str:
+    """``a, b``, each renamed ``AS <alias><col>`` when ``alias`` is set."""
+    return ", ".join(_q(c) + (f" AS {_q(alias + c)}" if alias else "") for c in cols)
+
+
+def _spread_names_sql(frame: str, name_col: str, block_cols: list[str], spread: int) -> str:
+    """The DISTINCT (block, name) representatives of ``frame``, spread
+    round-robin over ``spread`` partitions. The distinct's output is
+    bytes-tiny relative to the lane explosion above it, so AQE (rightly,
+    by bytes) coalesces it — on the single-row-group local extract to
+    ONE partition, serializing the per-name lane construction (measured
+    1.4 s single-task for er2 and 2.4 s for er3 at sf0.1). The explicit
+    spread costs ≤1/9 of the adjacent lane shuffle at any scale (the
+    lanes explode ×9 for er2, ×37 for er3), and explicit repartitions
+    are exempt from AQE re-coalescing (r12)."""
+    return (
+        f"(SELECT /*+ REPARTITION({spread}) */ * FROM"
+        f" (SELECT DISTINCT {_cols(block_cols)}, {_q(name_col)} FROM {frame}))"
+    )
+
+
+def _candidate_name_pairs_sql(
+    recs: str, name_col: str, block_cols: list[str], cap: int, spread: int
+) -> str:
+    """SQL text (a parenthesized subquery) of the distinct candidate
+    name pairs (block_cols..., name_a, name_b), name_a < name_b, from
+    pigeonhole lanes over the DISTINCT (block, name) representatives of
+    ``recs`` (module docstring)."""
+    nm, blocks = _q(name_col), _cols(block_cols)
+    blocks_str = ", ".join(f"cast({_q(b)} as string)" for b in block_cols)
+    # Shared lane-key sub-expressions (r13, guide §1.2): two stacked
+    # projections below the explode compute the prefix + suffix once,
+    # then the 3 triples + 3 complements from the suffix; each lane key
+    # is a 6-piece concat_ws of precomputed columns and each xs entry a
+    # 1-char substring of a precomputed complement. CollapseProject
+    # cannot re-inline them (non-cheap aliases referenced more than
+    # once). Key bytes equal the flat concat_ws of every field for
+    # non-null fields (the all-NULL-block corner is a consistent key
+    # remap; candidates are levenshtein-verified downstream regardless).
+    lanes = []
     for t in range(3):
         for j in range(3):
             key = (
                 f"concat_ws(chr(31), _g_pre, '{t}', _g_tr{t}, '{j}',"
                 f" substring(_g_cp{t}, {2 * j + 1}, 2))"
             )
-            xs = "array(" + ",".join(
-                f"substring(_g_cp{t}, {u}, 1)" for u in _UNPINNED[j]
-            ) + ")"
-            lane_sqls.append(f"named_struct('k', {key}, 'xs', {xs})")
-
-    def _shared_select(frame: DataFrame, sqls: dict, extra: list) -> DataFrame:
-        return frame.select(
-            *extra,
-            *[
-                cached_column(
-                    ("er2_shared", alias, *ckey),
-                    lambda s=sql, a=alias: F.expr(s).alias(a),
-                )
-                for alias, sql in sqls.items()
-            ],
-        )
-
-    base = _shared_select(
-        names, shared1, [*block_cols, F.col(name_col).alias("_n")]
-    )
-    base = _shared_select(base, shared2, [*block_cols, "_n", "_g_pre"])
-    arr = cached_column(
-        ("er2_lane_arr", *ckey),
-        lambda: F.expr(f"array({', '.join(lane_sqls)})"),
-    )
-    laned = base.select(
-        *block_cols, "_n", F.explode(arr).alias("l")
-    ).select(
-        *block_cols, "_n", F.col("l.k").alias("k"), F.col("l.xs").alias("xs")
-    )
-
-    # sizes counts DISTINCT NAMES per lane (not records): duplication
-    # never triggers the split, only genuine name-space density does.
-    # r12: the count comes from a WINDOW over the lane frame (one
-    # hash shuffle on k) instead of the former groupBy + sort-merge
-    # join back — the join shuffled the laned frame a second time and
-    # sorted both sides for nothing a partition-local count needs
-    # (guide §2.4 "remove shuffles outright"; the same one-pass shape
-    # _shifted_candidate_name_pairs already used for its index sizes).
-    from pyspark.sql import Window
-
-    sized = laned.withColumn(
-        "n", F.count(F.lit(1)).over(Window.partitionBy("k"))
-    )
+            xs = ", ".join(f"substring(_g_cp{t}, {u}, 1)" for u in _UNPINNED[j])
+            lanes.append(f"named_struct('k', {key}, 'xs', array({xs}))")
     # Oversized lane-blocks emit 4 sub-keys (one per unpinned char),
     # small ones the lane key itself — frequency-aware, recall-safe.
-    subkeys = F.array(
-        *[
-            F.concat(F.col("k"), F.lit(_SEP + str(i)), F.element_at("xs", i + 1))
-            for i in range(4)
-        ]
+    subkeys = ", ".join(
+        f"concat(k, chr(31), '{i}', element_at(xs, {i + 1}))" for i in range(4)
     )
-    keyed = sized.select(
-        *block_cols,
-        "_n",
-        F.explode(
-            F.when(F.col("n") > cap, subkeys).otherwise(F.array(F.col("k")))
-        ).alias("fk"),
-    )
+    # The lane size counts DISTINCT NAMES per lane (not records), so
+    # duplication never triggers the split, only name-space density;
+    # it comes from a WINDOW over the lane frame (one hash shuffle on
+    # k), not a groupBy + join back that shuffled the lanes twice
+    # (r12, guide §2.4).
+    #
     # Join-strategy note: static size estimates cannot see the ×9
     # explode fan-out (the scan side is small, the lane relations are
     # not), so Catalyst's initial plan broadcast the self-join below —
@@ -225,45 +166,56 @@ def _candidate_name_pairs(
     # repo's "no broadcast hints on scaled inputs" rule, not an
     # exception to it.
     #
-    # Exchange-reuse contract (r12): the two self-join sides must be
-    # CANONICALLY IDENTICAL so the sorted lane exchange is computed
-    # once and fed to both sides of the merge join (the round-11 plan
-    # computed the whole scan→distinct→lanes→sizes pipeline TWICE —
-    # zero ReusedExchange nodes — because the b side pruned the block
-    # columns and carried asymmetric inferred IsNotNull constraints).
-    # Both sides therefore project the SAME columns in the SAME order,
-    # and the join condition includes the block columns: redundant for
-    # correctness — fk equality already implies block equality, the
-    # lane key embeds the \x1f-joined block values as its prefix — but
-    # it keeps the constraint inference symmetric. Verified in the
-    # committed plan: one lane subtree + ReusedExchange.
-    # Both sides alias EVERY column (a pass-through AttributeReference
-    # on one side vs an Alias on the other breaks plan canonical
-    # equality, hence reuse).
-    a = keyed.select(
-        *[F.col(c).alias(f"_ra_{c}") for c in block_cols],
-        F.col("_n").alias("name_a"),
-        F.col("fk").alias("_ra_fk"),
-    )
-    b = keyed.select(
-        *[F.col(c).alias(f"_rb_{c}") for c in block_cols],
-        F.col("_n").alias("name_b"),
-        F.col("fk").alias("_rb_fk"),
-    )
-    cond = [F.col("_ra_fk") == F.col("_rb_fk")] + [
-        F.col(f"_ra_{c}") == F.col(f"_rb_{c}") for c in block_cols
-    ]
-    return (
-        a.hint("merge")
-        .join(b, cond)
-        .filter(F.col("name_a") < F.col("name_b"))
-        .select(
-            *[F.col(f"_ra_{c}").alias(c) for c in block_cols],
-            "name_a",
-            "name_b",
+    # Exchange-reuse contract (r12): the two self-join sides are
+    # CANONICALLY IDENTICAL (same columns, same order, every column
+    # aliased) so the sorted lane exchange is computed once and feeds
+    # both sides of the merge join; the block-column equalities are
+    # redundant (the lane key embeds the block values) but keep the
+    # inferred constraints symmetric.
+    def side(s: str) -> str:
+        return (
+            f"(SELECT {_cols(block_cols, alias=f'_r{s}_')}, _n AS name_{s},"
+            f" fk AS _r{s}_fk FROM {keyed}) {s}"
         )
-        .distinct()
+
+    on = " AND ".join(
+        ["a._ra_fk = b._rb_fk"]
+        + [f"a.{_q('_ra_' + c)} = b.{_q('_rb_' + c)}" for c in block_cols]
     )
+    picked = ", ".join(f"a.{_q('_ra_' + c)} AS {_q(c)}" for c in block_cols)
+    keyed = f"""(
+      SELECT {blocks}, _n,
+             explode(CASE WHEN n > {cap} THEN array({subkeys}) ELSE array(k) END) AS fk
+      FROM (
+        SELECT *, count(1) OVER (PARTITION BY k) AS n
+        FROM (
+          SELECT {blocks}, _n, l.k AS k, l.xs AS xs
+          FROM (
+            SELECT {blocks}, _n, explode(array({', '.join(lanes)})) AS l
+            FROM (
+              SELECT {blocks}, _n, _g_pre,
+                     substring(_g_s, 1, 3) AS _g_tr0,
+                     substring(_g_s, 4, 3) AS _g_tr1,
+                     substring(_g_s, 7, 3) AS _g_tr2,
+                     substring(_g_s, 4, 6) AS _g_cp0,
+                     concat(substring(_g_s, 1, 3), substring(_g_s, 7, 3)) AS _g_cp1,
+                     substring(_g_s, 1, 6) AS _g_cp2
+              FROM (
+                SELECT {blocks}, {nm} AS _n,
+                       concat_ws(chr(31), {blocks_str}, cast(length({nm}) as string)) AS _g_pre,
+                       substring({nm}, greatest(1, length({nm}) - 8), 9) AS _g_s
+                FROM {_spread_names_sql(recs, name_col, block_cols, spread)}
+              )
+            )
+          )
+        )
+      )
+    )"""
+    return f"""(
+      SELECT /*+ MERGE(a) */ DISTINCT {picked}, name_a, name_b
+      FROM {side('a')} JOIN {side('b')} ON {on}
+      WHERE name_a < name_b
+    )"""
 
 
 class IdPairBudgetExceeded(RuntimeError):
@@ -326,20 +278,22 @@ def _preflight_id_pair_budget(
         )
 
 
-def _expand_to_ids(
-    recs: DataFrame,
+def _expand_sql(
+    pairs: str,
+    recs: str,
     id_col: str,
     name_col: str,
     block_cols: list[str],
-    name_pairs: DataFrame,
-) -> DataFrame:
-    """Output-bound expansion: name-level pairs back to record-level
-    (id_a < id_b, name_a, name_b [, carried cols]) via two equi-joins
-    on (block, name). Each output pair is produced exactly once — an
-    unordered id pair determines its name pair — so no record-level
-    distinct is needed."""
-    carried = [c for c in name_pairs.columns if c not in
-               (*block_cols, "name_a", "name_b")]
+    carried: list[str],
+    spread: int,
+    pair_ids: tuple[str, str],
+) -> str:
+    """Output-bound expansion as SQL text: name-level ``pairs``
+    (block_cols..., name_a, name_b, carried...) back to record-level
+    (id_a < id_b named ``pair_ids``, name_a, name_b, carried...) via
+    two equi-joins on (block, name) against ``recs``. Each output pair
+    is produced exactly once — an unordered id pair determines its name
+    pair — so no record-level distinct is needed."""
     # Parallelism guard for the fan-out: the name-pair set is orders
     # of magnitude smaller than its record-pair expansion, so AQE
     # (rightly, by shuffle bytes) coalesces the distinct's exchange to
@@ -349,71 +303,58 @@ def _expand_to_ids(
     # round-robin spread of the TINY side costs nothing at any scale
     # and parallelizes the output-bound phase under any join strategy;
     # explicit repartition counts are exempt from AQE re-coalescing.
-    name_pairs = name_pairs.repartition(
-        shuffle_partitions(name_pairs.sparkSession)
-    )
-    ra = recs.select(
-        *[F.col(b).alias(f"_ba_{b}") for b in block_cols],
-        F.col(name_col).alias("_na"),
-        F.col(id_col).alias("_ia"),
-    )
-    rb = recs.select(
-        *[F.col(b).alias(f"_bb_{b}") for b in block_cols],
-        F.col(name_col).alias("_nb"),
-        F.col(id_col).alias("_ib"),
-    )
-    joined = (
-        name_pairs.join(
-            ra,
-            [F.col(f"_ba_{b}") == F.col(b) for b in block_cols]
-            + [F.col("_na") == F.col("name_a")],
+    def side(s: str) -> str:
+        return (
+            f"(SELECT {_cols(block_cols, alias=f'_b{s}_')}, {_q(name_col)} AS _n{s},"
+            f" {_q(id_col)} AS _i{s} FROM {recs}) r{s}"
         )
-        .join(
-            rb,
-            [F.col(f"_bb_{b}") == F.col(b) for b in block_cols]
-            + [F.col("_nb") == F.col("name_b")],
+
+    def on(s: str) -> str:
+        return " AND ".join(
+            [f"r{s}.{_q(f'_b{s}_{b}')} = p.{_q(b)}" for b in block_cols]
+            + [f"r{s}._n{s} = p.name_{s}"]
         )
-    )
-    fwd = F.col("_ia") < F.col("_ib")
-    return joined.select(
-        F.least("_ia", "_ib").alias("id_a"),
-        F.greatest("_ia", "_ib").alias("id_b"),
-        F.when(fwd, F.col("name_a")).otherwise(F.col("name_b")).alias("name_a"),
-        F.when(fwd, F.col("name_b")).otherwise(F.col("name_a")).alias("name_b"),
-        *carried,
-    )
+
+    extra = "".join(f", p.{_q(c)}" for c in carried)
+    return f"""
+    SELECT least(_ia, _ib) AS {_q(pair_ids[0])}, greatest(_ia, _ib) AS {_q(pair_ids[1])},
+           CASE WHEN _ia < _ib THEN p.name_a ELSE p.name_b END AS name_a,
+           CASE WHEN _ia < _ib THEN p.name_b ELSE p.name_a END AS name_b{extra}
+    FROM (SELECT /*+ REPARTITION({spread}) */ * FROM {pairs}) p
+    JOIN {side('a')} ON {on('a')}
+    JOIN {side('b')} ON {on('b')}"""
 
 
-def _same_name_pairs(
-    recs: DataFrame,
+def _same_name_sql(
+    recs: str,
     id_col: str,
     name_col: str,
     block_cols: list[str],
-) -> DataFrame:
-    """All (id_a < id_b) pairs of records sharing (block, name) —
-    exact duplicates need no blocking; the self-equi-join is
-    output-bound."""
-    a = recs.select(
-        *block_cols,
-        F.col(name_col).alias("name_a"),
-        F.col(id_col).alias("id_a"),
+    dist: bool,
+    pair_ids: tuple[str, str],
+) -> str:
+    """All (id_a < id_b) pairs of records sharing (block, name), as SQL
+    text over ``recs`` with the id columns named ``pair_ids`` (and
+    ``dist`` 0 when asked) — exact duplicates need no blocking; the
+    self-equi-join is output-bound."""
+    b_id = _q(f"_b_{id_col}")
+    on = " AND ".join(
+        [f"b.{_q('_b_' + c)} = a.{_q(c)}" for c in block_cols]
+        + [f"b.{_q('_b_' + name_col)} = a.name_a"]
     )
-    b = recs.select(
-        *[F.col(c).alias(f"_b_{c}") for c in (*block_cols, name_col, id_col)]
-    )
-    return (
-        a.join(
-            b,
-            [F.col(f"_b_{c}") == F.col(c) for c in block_cols]
-            + [F.col(f"_b_{name_col}") == F.col("name_a")],
-        )
-        .filter(F.col("id_a") < F.col(f"_b_{id_col}"))
-        .select(
-            "id_a",
-            F.col(f"_b_{id_col}").alias("id_b"),
-            "name_a",
-            F.col("name_a").alias("name_b"),
-        )
+    return f"""
+    SELECT a.id_a AS {_q(pair_ids[0])}, b.{b_id} AS {_q(pair_ids[1])}, a.name_a,
+           a.name_a AS name_b{', 0 AS dist' if dist else ''}
+    FROM (SELECT {_cols(block_cols)}, {_q(name_col)} AS name_a, {_q(id_col)} AS id_a
+          FROM {recs}) a
+    JOIN (SELECT {_cols((*block_cols, name_col, id_col), alias='_b_')} FROM {recs}) b
+      ON {on}
+    WHERE a.id_a < b.{b_id}"""
+
+
+def _records(df: DataFrame, id_col: str, name_col: str, block_cols: list[str]) -> DataFrame:
+    return df.select(
+        F.col(id_col).alias("_id"), F.col(name_col).alias("_nm"), *block_cols
     )
 
 
@@ -428,24 +369,126 @@ def pigeonhole_candidate_pairs(
     matching under positional pigeonhole blocking (module docstring).
     Deterministic; callers verify with a banded ``levenshtein``.
     Identical-name pairs (trivially distance 0) are always candidates."""
-    recs = df.select(
-        F.col(id_col).alias("_id"), F.col(name_col).alias("_nm"), *block_cols
+    spark = df.sparkSession
+    spread = shuffle_partitions(spark)
+    return lifecycle.sql(
+        spark,
+        _expand_sql(
+            _candidate_name_pairs_sql("{recs}", "_nm", block_cols, cap, spread),
+            "{recs}", "_id", "_nm", block_cols, [], spread, ("id_a", "id_b"),
+        )
+        + " UNION ALL "
+        + _same_name_sql("{recs}", "_id", "_nm", block_cols, False, ("id_a", "id_b")),
+        recs=_records(df, id_col, name_col, block_cols),
     )
-    npairs = _candidate_name_pairs(recs, "_nm", block_cols, cap)
-    expanded = _expand_to_ids(recs, "_id", "_nm", block_cols, npairs)
-    same = _same_name_pairs(recs, "_id", "_nm", block_cols)
-    return expanded.unionByName(same)
 
 
-def _shifted_candidate_name_pairs(
+# Complement parts per index triple t for er3's level-2 split: (suffix
+# coordinate start, width); seam-free by construction (t=1 splits per
+# region).
+_PARTS = {
+    0: [(4, 2), (6, 2), (8, 2)],
+    1: [(1, 2), (3, 1), (7, 2), (9, 1)],
+    2: [(1, 2), (3, 2), (5, 2)],
+}
+# Single-char complement coords per t for the level-3 split.
+_COMP_COORDS = {0: [4, 5, 6, 7, 8, 9], 1: [1, 2, 3, 7, 8, 9], 2: [1, 2, 3, 4, 5, 6]}
+# Multi-match-aware probe windows (the PassJoin selection): every
+# key embeds the INDEX string's length, and a probe of b claims a
+# partner length M, fixing Δ = len(b) − M. An untouched region's
+# end-anchored displacement ρ is the net length change to its
+# right, the rest of the Δ budget (Δ − ρ) is spent to its left,
+# and each unit of either costs one edit: |ρ| + |Δ − ρ| ≤ 2. So
+# the probe window is 3 displacements at Δ=0, 2 at |Δ|=1, 3 at
+# |Δ|=2 — not a blanket ±2 — and a region ending at the string
+# end has ρ = 0 EXACTLY for every Δ (nothing to its right can
+# move end-anchored content). Two effects: cross-length keys
+# never meet an index entry unless that length exists (the sizes
+# window prunes them), and on a fixed-length corpus the interior
+# windows shrink 5 → 3. Measured on the dense-serial sf0.1
+# corpus, windows + the recursive split cut candidates 60.1 →
+# 40.8/name — only ~1.5× under the in-block quadratic (60),
+# because dense digit strings cap the selectivity any
+# shift-tolerant positional key can reach (a probe window of 3
+# on a 10-ary alphabet discriminates at best ~3.3× per pinned
+# char). That is the honest price of indel completeness here;
+# er2's aligned keys (6.0 → 12.7/name) remain the scale lane,
+# and the two-phase collapse keeps er3's cost constant across
+# replicated corpora regardless (see the registry docstring).
+_RHO = {-2: (-2, -1, 0), -1: (-1, 0), 0: (-1, 0, 1), 1: (0, 1), 2: (0, 1, 2)}
+
+
+def _rhos_for(delta: int, end_coord: int) -> tuple[int, ...]:
+    return (0,) if end_coord == 9 else _RHO[delta]
+
+
+def _map_sql(groups: dict[int, list[str]]) -> str:
+    return "map(" + ", ".join(
+        f"{key}, array({', '.join(vs)})" for key, vs in groups.items()
+    ) + ")"
+
+
+def _split2_map_sql() -> str:
+    """The level-2 variant table: per row key (role, t, Δ) the parts
+    (and their displacements) an oversized lane re-keys on. The
+    (role, t, part, Δ, ρ) enumeration is DATA — a literal map looked up
+    per row — not a chain of hundreds of when() branches: the
+    when-chain form generated ~1.6 MB codegen classes whose
+    compilation dominated the whole name phase (measured: a fixed
+    ~20 s across every corpus size). A map keyed by the row's
+    (role, t, Δ) rather than one flat array FILTERED per row (r12):
+    ArrayFilter is interpreted (higher-order functions are
+    CodegenFallback) and ran on EVERY over-cap lane row; GetMapValue
+    hands the transform only the rows that match.
+
+    Each variant is one int, (part * 10 + width) * 100 + (the part's
+    offset from the suffix start + 10): a table of ~100 named structs
+    took ~4× longer to analyse than this one of plain ints."""
+    groups: dict[int, list[str]] = {}
+    for t in range(3):
+        for pi, (a, w) in enumerate(_PARTS[t]):
+            variants = [(0, 0, 0)] + [
+                (1, d, r) for d in range(-2, 3) for r in _rhos_for(d, a + w - 1)
+            ]
+            for rl, d, r in variants:
+                groups.setdefault(rl * 100 + t * 10 + (d + 2), []).append(
+                    str((pi * 10 + w) * 100 + (a - r - 1 + 10))
+                )
+    return _map_sql(groups)
+
+
+def _split3_map_sql() -> str:
+    """The level-3 variant table, keyed by (role, t, part, Δ): every
+    complement char the part did not pin, at its displacement window
+    (the same map shape as level 2; this table was the worst
+    when-chain and HOF offender, ~500 entries). Each variant is one
+    int, coord * 100 + (the char's offset from the suffix start + 10)."""
+    groups: dict[int, list[str]] = {}
+    for t in range(3):
+        for pi, (a, w) in enumerate(_PARTS[t]):
+            for c in (c for c in _COMP_COORDS[t] if not a <= c < a + w):
+                variants = [(0, 0, 0)] + [
+                    (1, d, r) for d in range(-2, 3) for r in _rhos_for(d, c)
+                ]
+                for rl, d, r in variants:
+                    groups.setdefault(
+                        rl * 1000 + t * 100 + pi * 10 + (d + 2), []
+                    ).append(str(c * 100 + (c - r - 1 + 10)))
+    return _map_sql(groups)
+
+
+def _shifted_candidates(
     df: DataFrame,
     name_col: str,
     block_cols: list[str],
     cap: int,
-) -> DataFrame:
+) -> tuple[str, dict[str, DataFrame]]:
     """Indel-complete candidate name pairs (PassJoin-style shifted
     probes): every in-block pair within levenshtein 2 — substitutions
-    AND insert/deletes — collides on at least one key.
+    AND insert/deletes — collides on at least one key. Returns the SQL
+    text of the candidate pairs (a parenthesized subquery: block_cols...,
+    name_a, name_b; name_a < name_b) and the persisted lane frames that
+    text reads, to be bound by the caller's ``lifecycle.sql``.
 
     Construction (all on DISTINCT (block, name) representatives):
 
@@ -470,6 +513,13 @@ def _shifted_candidate_name_pairs(
       within ±2 of its canonical absolute position — probed
       accordingly. Recall survives the split exactly as in the
       aligned scheme.
+    * Level 3: a level-2 lane still over cap (low-entropy part
+      content — e.g. the constant high-order digits of dense serial
+      ids) re-pigeonholes each UNPINNED complement char: the index
+      pins each at its exact position, the probe at the char's
+      displacement window. ≤2 edits leave ≥2 of the ≥4 rest chars
+      untouched, so the collision guarantee survives this split too.
+      No level 4: leaf keys are emitted regardless, keeping recall.
     * SHORT lane: the suffix/probe arithmetic is clamp-free only for
       len ≥ 13, so every name with len ≤ 14 also shares one
       (block, short) lane — a pair outside the long path's guarantee
@@ -478,401 +528,166 @@ def _shifted_candidate_name_pairs(
     Cost shape: 3 index + ~31 probe key rows per DISTINCT name at
     level 1 (probe keys enumerate candidate partner lengths × their
     displacement windows — on a fixed-length corpus all but ~7 die
-    in the size join, which drops any probe key no index entry
-    uses), one size aggregate and one equi-join per split level.
+    at the size window, which drops any probe key no index entry
+    uses), one window shuffle and one equi-join per split level.
     The shift multiplier is the price of indel completeness — this
     is why er2 (substitution-exact, no shifts) remains the default
-    and er3 the completeness lane; the measured budget numbers and
-    their dense-serial ceiling are in the window comment below."""
-    names = df.select(*block_cols, name_col).distinct()
-    # Spread the ~37-lane-per-name explosion (r12): AQE coalesces the
-    # distinct's bytes-tiny output — to ONE partition on the local
-    # single-row-group extract — and the per-name probe-lane
-    # construction (dozens of substring/concat_ws exprs) then ran
-    # serially (measured 2.4 s single-task at sf0.1). The explicit
-    # round-robin spread costs ≤1/37 of the adjacent lane shuffle at
-    # any scale (the _expand_to_ids precedent).
-    names = names.repartition(shuffle_partitions(df.sparkSession))
-    name = F.col(name_col)
-    ln = F.length(name)
-    sstart = F.greatest(F.lit(1), ln - 8)  # suffix abs start (1-based)
+    and er3 the completeness lane (``_RHO`` has the measured budget).
 
-    # complement parts per t: (s-coord start, width); seam-free by
-    # construction (t=1 splits per region)
-    parts_of = {
-        0: [(4, 2), (6, 2), (8, 2)],
-        1: [(1, 2), (3, 1), (7, 2), (9, 1)],
-        2: [(1, 2), (3, 2), (5, 2)],
-    }
-    # SQL-text twins of the lane expressions: the level-1 lane arrays
-    # (3 index + ~31 probe structs, each a concat_ws over block cols +
-    # substrings) built Column-by-Column cost ~1.5 s of py4j BUILD
-    # chatter per invocation; one generated SQL string parses JVM-side
-    # into the identical tree (same fix as the split2/split3 variant
-    # arrays below — SCALE.md "er3 build cost"). r13: the parsed tree
-    # is additionally memoized per (name_col, block_cols) —
-    # exprcache.cached_column — so repeat invocations skip the JVM
-    # parse entirely (guide §5: driver-side plan build).
-    _nm = f"`{name_col}`"
-    _blocks_sql = ", ".join(f"cast(`{b}` as string)" for b in block_cols)
-    _ln_sql = f"length({_nm})"
-    _sstart_sql = f"greatest(1, {_ln_sql} - 8)"
+    Plan build: each persist boundary is ONE ``lifecycle.sql`` over
+    SQL text with its input frame bound as a view, analysed once — the
+    DataFrame-chain form issued ~3,400 py4j commands per er3 build, and
+    each of its ~21 calls re-analysed the growing plan. The text nests
+    subqueries rather than CTEs: a plan built from a WITH clause cost
+    ~0.16 s to re-analyse under the caller's forcing aggregate, the
+    nested one ~0.02 s."""
+    spark = df.sparkSession
+    nm, blocks = _q(name_col), _cols(block_cols)
+    blocks_str = ", ".join(f"cast({_q(b)} as string)" for b in block_cols)
+    ln = f"length({nm})"
+    sstart = f"greatest(1, {ln} - 8)"  # suffix abs start (1-based)
 
     # Shared lane-key sub-expressions (r13, guide §1.2 per-task work):
-    # the 37 lane keys re-derived the SAME pieces per key — the block
-    # casts and partner-length string 37×, each 3-char content window
-    # up to 4× (profiled: the lv1 explode stage summed 18.1 s of task
-    # CPU at sf0.1, the pipeline's CPU center). Computing the 5
-    # partner-length prefixes (one per Δ), the 9 reachable content
-    # triples (one per absolute offset), and the short-lane key ONCE
-    # per row in a projection BELOW the explode leaves each lane key
-    # a 3-piece concat_ws of precomputed columns. CollapseProject
+    # the 5 partner-length prefixes (one per Δ), the reachable content
+    # triples (one per absolute offset) and the short-lane key are
+    # computed ONCE per row in a projection BELOW the explode, so each
+    # of the ~37 lane keys is a 3-piece concat_ws of precomputed
+    # columns (profiled before: the lv1 explode stage summed 18.1 s of
+    # task CPU at sf0.1 re-deriving them per key). CollapseProject
     # cannot re-inline them (non-cheap aliases referenced more than
-    # once), so the sharing survives optimization — verified in the
-    # committed plan (plans/r13). Key bytes are unchanged:
-    # concat_ws(s, concat_ws(s, blocks..., L), t, c) ==
-    # concat_ws(s, blocks..., L, t, c) for the non-null fields these
-    # keys are built from (the all-NULL-block corner would map to a
-    # "" prefix rather than a skipped field — a per-row-consistent
-    # key remap that cannot lose a collision, and every candidate is
-    # levenshtein-verified downstream regardless).
-    def _cname(off: int) -> str:
+    # once). Key bytes equal the flat concat_ws of every field for
+    # non-null fields (the all-NULL-block corner maps to a "" prefix —
+    # a per-row-consistent key remap that cannot lose a collision,
+    # and every candidate is levenshtein-verified downstream).
+    def cname(off: int) -> str:
         return f"_g_c{off}" if off >= 0 else f"_g_cm{-off}"
 
-    # 'r' is the lane ROLE (0 = index, 1 = probe): r12 unified the
-    # formerly separate index and probe lane frames into ONE exploded
-    # frame so each level needs one shuffle (a window keyed on the
-    # lane key) instead of a window on the index side plus a sizes
-    # distinct plus a sort-merge join back onto the probe side — the
-    # round-11 plan paid that join machinery twice (level 1 and 2) and
-    # materialized four caches where two suffice (guide §2.4).
-    def _lane_sql(k1: str, t: int, dl: int, r: int) -> str:
+    # 'r' is the lane ROLE (0 = index, 1 = probe): index and probe
+    # lanes ride ONE exploded frame (r12), so each level needs one
+    # shuffle (a window keyed on the lane key) instead of a window on
+    # the index side plus a sizes distinct plus a sort-merge join onto
+    # the probe side.
+    def lane(k1: str, t: int, dl: int, r: int) -> str:
         return f"named_struct('k1', {k1}, 't', {t}, 'dl', {dl}, 'r', {r})"
 
-    def _lane_key_sql(delta: int, t: int, off: int) -> str:
-        return f"concat_ws(chr(31), _g_p{delta + 2}, '{t}', {_cname(off)})"
-
-    # short lane: emitted in BOTH roles, one key per block (never split)
-    _short_sql = (
-        f"case when {_ln_sql} <= 14 then "
-        f"array({_lane_sql('_g_ks', -1, 0, 0)}, "
-        f"{_lane_sql('_g_ks', -1, 0, 1)}) end"
-    )
-
-    def laned(lane_sqls: list[str], content_offs: list[int]) -> DataFrame:
-        shared_sqls = {
-            f"_g_p{dlt + 2}": (
-                f"concat_ws(chr(31), {_blocks_sql},"
-                f" cast(({_ln_sql} - {dlt}) as string))"
-            )
-            for dlt in range(-2, 3)
-        }
-        for off in content_offs:
-            shared_sqls[_cname(off)] = (
-                f"substring({_nm}, greatest(1, {_sstart_sql} + {off - 1}), 3)"
-            )
-        shared_sqls["_g_ks"] = f"concat_ws(chr(31), {_blocks_sql}, 'S')"
-        ckey = (name_col, tuple(block_cols))
-        shared = names.select(
-            *block_cols,
-            name_col,
-            *[
-                cached_column(
-                    ("er3_shared", alias, *ckey),
-                    lambda s=sql, a=alias: F.expr(s).alias(a),
-                )
-                for alias, sql in shared_sqls.items()
-            ],
-        )
-        # distinct: shifted probes often re-extract identical content
-        # (e.g. inside digit runs) — identical keys add join rows, not
-        # recall. Roles are part of the struct, so an index entry is
-        # never folded into an identical-content probe entry.
-        arr = cached_column(
-            ("er3_lane_arr", *ckey),
-            lambda: F.expr(
-                f"array_distinct(concat(array({', '.join(lane_sqls)}), "
-                f"coalesce({_short_sql}, array())))"
-            ),
-        )
-        return shared.select(
-            *block_cols, name_col, F.explode(arr).alias("l")
-        ).select(
-            *block_cols,
-            name_col,
-            F.col("l.k1").alias("k1"),
-            F.col("l.t").alias("t"),
-            F.col("l.dl").alias("dl"),
-            F.col("l.r").alias("r"),
-        )
-
-    # Multi-match-aware probe windows (the PassJoin selection): every
-    # key embeds the INDEX string's length, and a probe of b claims a
-    # partner length M, fixing Δ = len(b) − M. An untouched region's
-    # end-anchored displacement ρ is the net length change to its
-    # right, the rest of the Δ budget (Δ − ρ) is spent to its left,
-    # and each unit of either costs one edit: |ρ| + |Δ − ρ| ≤ 2. So
-    # the probe window is 3 displacements at Δ=0, 2 at |Δ|=1, 3 at
-    # |Δ|=2 — not a blanket ±2 — and a region ending at the string
-    # end has ρ = 0 EXACTLY for every Δ (nothing to its right can
-    # move end-anchored content). Two effects: cross-length keys
-    # never meet an index entry unless that length exists (the sizes
-    # join prunes them), and on a fixed-length corpus the interior
-    # windows shrink 5 → 3. Measured on the dense-serial sf0.1
-    # corpus, windows + the recursive split cut candidates 60.1 →
-    # 40.8/name — only ~1.5× under the in-block quadratic (60),
-    # because dense digit strings cap the selectivity any
-    # shift-tolerant positional key can reach (a probe window of 3
-    # on a 10-ary alphabet discriminates at best ~3.3× per pinned
-    # char). That is the honest price of indel completeness here;
-    # er2's aligned keys (6.0 → 12.7/name) remain the scale lane,
-    # and the two-phase collapse keeps er3's cost constant across
-    # replicated corpora regardless (see the registry docstring).
-    RHO = {-2: (-2, -1, 0), -1: (-1, 0), 0: (-1, 0, 1),
-           1: (0, 1), 2: (0, 1, 2)}
-
-    def rhos_for(delta: int, end_coord: int):
-        return (0,) if end_coord == 9 else RHO[delta]
+    def lane_key(delta: int, t: int, off: int) -> str:
+        return f"concat_ws(chr(31), _g_p{delta + 2}, '{t}', {cname(off)})"
 
     # index content = the triple at absolute offset 3t+1 (substring of
     # the suffix window == the same direct substring of the name, the
     # suffix never extends past position 9); probe content = the same
-    # window re-extracted at offset 3t+1−ρ — so all 37 keys read from
-    # the 9 shared content columns and the 5 shared Δ-prefixes.
-    idx_lanes = [
-        _lane_sql(_lane_key_sql(0, t, 3 * t + 1), t, 0, 0) for t in range(3)
-    ]
-    prb_lanes = [
-        _lane_sql(_lane_key_sql(delta, t, 3 * t + 1 - rho), t, delta, 1)
+    # window re-extracted at offset 3t+1−ρ.
+    lanes = [lane(lane_key(0, t, 3 * t + 1), t, 0, 0) for t in range(3)] + [
+        lane(lane_key(delta, t, 3 * t + 1 - rho), t, delta, 1)
         for t in range(3)
         for delta in range(-2, 3)
-        for rho in rhos_for(delta, 3 * t + 3)
+        for rho in _rhos_for(delta, 3 * t + 3)
     ]
-    content_offs = sorted(
+    offs = sorted(
         {3 * t + 1 for t in range(3)}
         | {
             3 * t + 1 - rho
             for t in range(3)
             for delta in range(-2, 3)
-            for rho in rhos_for(delta, 3 * t + 3)
+            for rho in _rhos_for(delta, 3 * t + 3)
         }
     )
-    # The split legs (small/over at two levels) each re-reference the
-    # laned and level-2 frames; without a persist the whole
-    # lane-construction subtree replays per leg (~6×) — measured 3×
-    # wall-clock on the name phase. The frames are DISTINCT-NAME
-    # sized (15k names × ~34 short rows here), so MEMORY_AND_DISK is
-    # cheap; the result's first action populates them and the
-    # caller's lifecycle scope frees them.
-    from pyspark.sql import Window
-
-    # ONE lane frame, ONE shuffle per level (r12): index and probe
-    # lanes ride the same exploded frame (role column r), and the
-    # INDEX lane size every split decision reads comes from a window
-    # over the lane key counting index rows only. The inner
-    # sizes-join's probe pruning (drop probe keys no index entry
-    # uses) becomes the n >= 1 filter. Round 11 shipped a window on
-    # the index frame PLUS a sizes distinct PLUS a sort-merge join
-    # onto the probe frame, per level — two extra shuffles and two
-    # sorts of lane-sized frames each time, and four caches where two
-    # suffice. Window groups now buffer index+probe rows per hot key
-    # (~×13 of the index-only window); both the old SMJ and
-    # WindowExec buffer via the same spillable row-array, so the
-    # degradation mode is unchanged.
-    all1 = lifecycle.persist(
-        laned(idx_lanes + prb_lanes, content_offs)
-        .withColumn(
-            "n",
-            F.count(F.when(F.col("r") == 0, F.lit(1))).over(
-                Window.partitionBy("k1")
-            ),
-        )
-        .filter((F.col("r") == 0) | (F.col("n") >= 1))
+    shared = ", ".join(
+        [
+            f"concat_ws(chr(31), {blocks_str}, cast(({ln} - {d}) as string)) AS _g_p{d + 2}"
+            for d in range(-2, 3)
+        ]
+        + [f"substring({nm}, greatest(1, {sstart} + {off - 1}), 3) AS {cname(off)}" for off in offs]
+        + [f"concat_ws(chr(31), {blocks_str}, 'S') AS _g_ks"]
     )
-
-    # Single-char complement coords per (t, part) for the level-3
-    # split: everything in t's complement the part didn't pin.
-    comp_coords = {0: [4, 5, 6, 7, 8, 9], 1: [1, 2, 3, 7, 8, 9],
-                   2: [1, 2, 3, 4, 5, 6]}
-
-    def rest_coords(t: int, pi: int) -> list[int]:
-        a, w = parts_of[t][pi]
-        pinned = set(range(a, a + w))
-        return [c for c in comp_coords[t] if c not in pinned]
-
-    def split2(side: DataFrame):
-        """Below-cap (or short) lanes keep k1 as the join key;
-        oversized lanes emit level-2 keys (k1 + part id + part
-        content, probed at the part's displacement window). The
-        small/over decision reads the INDEX lane size carried on the
-        cached frame, so it is consistent across a colliding pair.
-        Role-aware single pass (r12): one variants array covers both
-        roles — index rows (r=0, dl=0) match only their vrl=0, vd=0
-        entries; probe rows their (vrl=1, vd=dl) window."""
-        j = side
-        small = j.filter((F.col("n") <= cap) | (F.col("t") < 0)).select(
-            *block_cols, name_col, "r", F.col("k1").alias("fk")
+    # short lane: emitted in BOTH roles, one key per block (never split)
+    short = f"case when {ln} <= 14 then array({lane('_g_ks', -1, 0, 0)}, {lane('_g_ks', -1, 0, 1)}) end"
+    # Lane frames are persisted: the split legs (small/over at two
+    # levels) each re-read the level-1 and level-2 frames, and without
+    # a persist the whole lane-construction subtree replays per leg
+    # (~6×; measured 3× wall-clock on the name phase). They are
+    # DISTINCT-NAME sized, so MEMORY_AND_DISK is cheap; the result's
+    # first action populates them and the caller's lifecycle scope
+    # frees them.
+    #
+    # Each level's INDEX lane size — what every split decision reads —
+    # is a window over the lane key counting index rows only, and
+    # probe keys no index entry uses drop at n >= 1 (r12: this
+    # replaced a sizes distinct plus a sort-merge join per level).
+    # Distinct lanes: shifted probes often re-extract identical
+    # content (e.g. inside digit runs) — identical keys add join rows,
+    # not recall; the role is part of the struct, so an index entry is
+    # never folded into an identical-content probe entry.
+    all1 = lifecycle.persist(lifecycle.sql(spark, f"""
+    SELECT * FROM (
+      SELECT *, count(CASE WHEN r = 0 THEN 1 END) OVER (PARTITION BY k1) AS n
+      FROM (
+        SELECT {blocks}, {nm}, l.k1 AS k1, l.t AS t, l.dl AS dl, l.r AS r
+        FROM (
+          SELECT {blocks}, {nm},
+                 explode(array_distinct(concat(array({', '.join(lanes)}),
+                                               coalesce({short}, array())))) AS l
+          FROM (
+            SELECT {blocks}, {nm}, {shared}
+            FROM {_spread_names_sql('{names}', name_col, block_cols, shuffle_partitions(spark))}
+          )
         )
-        # The (role, t, part, Δ, ρ) enumeration is DATA (a literal
-        # array filtered per row), not a chain of hundreds of when()
-        # branches: the when-chain form generated ~1.6 MB codegen
-        # classes whose compilation dominated the whole name phase
-        # (measured: a fixed ~20 s across every corpus size).
-        variants = []
-        for t in range(3):
-            for pi, (a, w) in enumerate(parts_of[t]):
-                variants.append((0, t, pi, a, w, 0, 0))
-                for delta in range(-2, 3):
-                    for rho in rhos_for(delta, a + w - 1):
-                        variants.append((1, t, pi, a, w, delta, rho))
-        # one F.expr per literal: building hundreds of literal structs
-        # through individual Column calls costs ~100 py4j round-trips
-        # per struct — measured 8-12 s of pure DataFrame BUILD time
-        # per er3 invocation; a single SQL text parses JVM-side into
-        # the identical tree (SCALE.md "er3 build cost").
-        # The literal is a MAP keyed by the row's (role, t, Δ) rather
-        # than one flat array FILTERED per row (r12): ArrayFilter over
-        # ~100 structs × a 3-field predicate is interpreted
-        # (higher-order functions are CodegenFallback) and ran on
-        # EVERY over-cap lane row; GetMapValue scans ~18 int keys and
-        # hands the transform only the rows that match. Same
-        # enumeration, same emitted keys.
-        from collections import defaultdict
+      )
+    ) WHERE r = 0 OR n >= 1""", names=df))
+    # Level 2: below-cap (or short) lanes keep k1 as the join key (leg
+    # s1 of ``legs``); oversized lanes emit level-2 keys — k1 + part id
+    # + part content, probed at the part's displacement window. Index
+    # rows (r=0, dl=0) look up only their own variants, probe rows
+    # their (Δ) window, so one map serves both roles.
+    all2 = lifecycle.persist(lifecycle.sql(spark, f"""
+    SELECT * FROM (
+      SELECT *, count(CASE WHEN r = 0 THEN 1 END) OVER (PARTITION BY k2) AS n2
+      FROM (
+        SELECT {blocks}, {nm}, r, t, dl, l2.k2 AS k2, l2.pi AS pi
+        FROM (
+          SELECT {blocks}, {nm}, r, t, dl,
+                 explode(array_distinct(transform(
+                   element_at({_split2_map_sql()}, CAST(r * 100 + t * 10 + (dl + 2) AS INT)),
+                   x -> named_struct(
+                     'k2', concat(k1, chr(31), CAST(x div 1000 AS STRING), chr(31),
+                                  substring({nm}, greatest(1, {sstart} + x % 100 - 10),
+                                            CAST(x div 100 % 10 AS INT))),
+                     'pi', CAST(x div 1000 AS INT))))) AS l2
+          FROM {{all1}} WHERE n > {cap} AND t >= 0
+        )
+      )
+    ) WHERE r = 0 OR n2 >= 1""", all1=all1))
+    legs = f"""(
+      SELECT {blocks}, {nm}, r, k1 AS fk FROM {{all1}} WHERE n <= {cap} OR t < 0
+      UNION ALL
+      SELECT {blocks}, {nm}, r, k2 AS fk FROM {{all2}} WHERE n2 <= {cap}
+      UNION ALL
+      SELECT {blocks}, {nm}, r,
+             explode(array_distinct(transform(
+               element_at({_split3_map_sql()},
+                          CAST(r * 1000 + t * 100 + pi * 10 + (dl + 2) AS INT)),
+               x -> concat(k2, chr(31), CAST(x div 100 AS STRING), chr(31),
+                           substring({nm}, greatest(1, {sstart} + x % 100 - 10), 1))))) AS fk
+      FROM {{all2}} WHERE n2 > {cap}
+    )"""
+    cand = f"""(
+      SELECT /*+ MERGE(a) */ DISTINCT {', '.join(f'a.{_q(c)}' for c in block_cols)}, name_a, name_b
+      FROM (SELECT {blocks}, {nm} AS name_a, fk FROM {legs} WHERE r = 0) a
+      JOIN (SELECT {nm} AS name_b, fk FROM {legs} WHERE r = 1) b ON a.fk = b.fk
+      WHERE name_a < name_b
+    )"""
+    return cand, {"all1": all1, "all2": all2}
 
-        groups: dict[int, list] = defaultdict(list)
-        for (rl, t, pi, a, w, d, r) in variants:
-            groups[rl * 100 + t * 10 + (d + 2)].append((pi, a, w, r))
-        # the variant table is static — memoize the parsed literal so
-        # repeat invocations skip the JVM parse of the ~100-struct map
-        # (r13, guide §5 driver-side plan build)
-        lit = cached_column(
-            ("er3_split2_map",),
-            lambda: F.expr(
-                "map(" + ",".join(
-                    f"{key}, array(" + ",".join(
-                        f"named_struct('vpi',{pi},'va',{a},'vw',{w},'vr',{r})"
-                        for (pi, a, w, r) in vs
-                    ) + ")"
-                    for key, vs in groups.items()
-                ) + ")"
-            ),
-        )
-        row_key = (
-            F.col("r") * 100 + F.col("t") * 10 + (F.col("dl") + 2)
-        ).cast("int")
-        mk = lambda x: F.struct(  # noqa: E731
-            F.concat(
-                F.col("k1"), F.lit(_SEP), x["vpi"].cast("string"), F.lit(_SEP),
-                name.substr(
-                    F.greatest(F.lit(1), sstart + x["va"] - x["vr"] - 1), x["vw"]
-                ),
-            ).alias("k2"),
-            x["vpi"].alias("pi"),
-        )
-        arr = F.array_distinct(F.transform(F.element_at(lit, row_key), mk))
-        lv2 = (
-            j.filter((F.col("n") > cap) & (F.col("t") >= 0))
-            .select(
-                *block_cols, name_col, "r", "t", "dl",
-                F.explode(arr).alias("l2"),
-            )
-            .select(
-                *block_cols, name_col, "r", "t", "dl",
-                F.col("l2.k2").alias("k2"), F.col("l2.pi").alias("pi"),
-            )
-        )
-        return small, lv2
 
-    s1, lv2 = split2(all1)
-    all2 = lifecycle.persist(
-        lv2.withColumn(
-            "n2",
-            F.count(F.when(F.col("r") == 0, F.lit(1))).over(
-                Window.partitionBy("k2")
-            ),
-        )
-        .filter((F.col("r") == 0) | (F.col("n2") >= 1))
-    )
-
-    def split3(lv2: DataFrame):
-        """Level-3: a level-2 lane still over cap (low-entropy part
-        content — e.g. the constant high-order digits of dense serial
-        ids) re-pigeonholes each UNPINNED complement char: the index
-        pins each at its exact position, the probe at the char's
-        displacement window. ≤2 edits leave ≥2 of the ≥4 rest chars
-        untouched, so the collision guarantee survives this split
-        too. No level 4: leaf keys are emitted regardless, keeping
-        recall; three pinned regions bound leaf lanes on every corpus
-        measured. Role-aware single pass (r12), like split2."""
-        j = lv2
-        small = j.filter(F.col("n2") <= cap).select(
-            *block_cols, name_col, "r", F.col("k2").alias("fk")
-        )
-        # same literal-array-of-variants trick as split2 (the
-        # when-chain here was ~500 branches — the worst codegen
-        # offender)
-        variants = []
-        for t in range(3):
-            for pi in range(len(parts_of[t])):
-                for c in rest_coords(t, pi):
-                    variants.append((0, t, pi, c, 0, 0))
-                    for delta in range(-2, 3):
-                        for rho in rhos_for(delta, c):
-                            variants.append((1, t, pi, c, delta, rho))
-        # single-F.expr literal — same py4j-chatter fix and same
-        # map-instead-of-filtered-array shape as split2 (this array
-        # was ~500 structs × a 4-field interpreted predicate per
-        # over-cap lv2 row — the worst HOF offender)
-        from collections import defaultdict
-
-        groups: dict[int, list] = defaultdict(list)
-        for (rl, t, pi, c, d, r) in variants:
-            groups[rl * 1000 + t * 100 + pi * 10 + (d + 2)].append((c, r))
-        # static variant table — memoized parse, like split2's (r13;
-        # this map was the worst offender at ~500 structs)
-        lit = cached_column(
-            ("er3_split3_map",),
-            lambda: F.expr(
-                "map(" + ",".join(
-                    f"{key}, array(" + ",".join(
-                        f"named_struct('vc',{c},'vr',{r})" for (c, r) in vs
-                    ) + ")"
-                    for key, vs in groups.items()
-                ) + ")"
-            ),
-        )
-        row_key = (
-            F.col("r") * 1000 + F.col("t") * 100 + F.col("pi") * 10
-            + (F.col("dl") + 2)
-        ).cast("int")
-        mk = lambda x: F.concat(  # noqa: E731
-            F.col("k2"), F.lit(_SEP), x["vc"].cast("string"), F.lit(_SEP),
-            name.substr(
-                F.greatest(F.lit(1), sstart + x["vc"] - x["vr"] - 1), F.lit(1)
-            ),
-        )
-        arr = F.array_distinct(F.transform(F.element_at(lit, row_key), mk))
-        deep = j.filter(F.col("n2") > cap).select(
-            *block_cols, name_col, "r", F.explode(arr).alias("fk")
-        )
-        return small, deep
-
-    s2, lv3 = split3(all2)
-
-    legs = s1.unionByName(s2).unionByName(lv3)
-    a = legs.filter(F.col("r") == 0).select(
-        *block_cols, F.col(name_col).alias("name_a"), "fk"
-    )
-    b = legs.filter(F.col("r") == 1).select(
-        F.col(name_col).alias("name_b"), "fk"
-    )
-    return (
-        a.hint("merge")
-        .join(b, ["fk"])
-        .filter(F.col("name_a") < F.col("name_b"))
-        .select(*block_cols, "name_a", "name_b")
-        .distinct()
-    )
+def _shifted_candidate_name_pairs(
+    df: DataFrame,
+    name_col: str,
+    block_cols: list[str],
+    cap: int,
+) -> DataFrame:
+    """The candidate name pairs of ``_shifted_candidates`` as a frame."""
+    cand, frames = _shifted_candidates(df, name_col, block_cols, cap)
+    return lifecycle.sql(df.sparkSession, f"SELECT * FROM {cand}", **frames)
 
 
 def pigeonhole_matches(
@@ -884,6 +699,7 @@ def pigeonhole_matches(
     max_dist: int = 2,
     max_id_pairs: int | None = 1_000_000_000,
     n_rows: int | None = None,
+    pair_ids: tuple[str, str] = ("id_a", "id_b"),
 ) -> DataFrame:
     """Verified matches (id_a, id_b, name_a, name_b, dist) with
     levenshtein ≤ ``max_dist``, verified at NAME level before the
@@ -897,23 +713,38 @@ def pigeonhole_matches(
     disk-filling expansion (None disables). Pass ``n_rows`` (parquet
     footer count) to skip the pre-flight's aggregate job when
     C(n_rows, 2) already fits the budget — keeps the plan build
-    zero-job on corpora where the quadratic regime is impossible."""
-    recs = df.select(
-        F.col(id_col).alias("_id"), F.col(name_col).alias("_nm"), *block_cols
-    )
+    zero-job on corpora where the quadratic regime is impossible.
+    ``pair_ids`` names the two id columns: naming them in the text is
+    free, while a ``select`` over the built plan re-analyses all of it
+    (~0.13 s for er3's)."""
+    recs = _records(df, id_col, name_col, block_cols)
     if max_id_pairs is not None:
         _preflight_id_pair_budget(
             recs, "_nm", block_cols, max_id_pairs, "pigeonhole_matches",
             n_rows=n_rows,
         )
-    verified = _candidate_name_pairs(recs, "_nm", block_cols, cap).withColumn(
-        "dist", F.levenshtein("name_a", "name_b", max_dist)
-    ).filter(F.col("dist").between(0, max_dist))
-    expanded = _expand_to_ids(recs, "_id", "_nm", block_cols, verified)
-    same = _same_name_pairs(recs, "_id", "_nm", block_cols).withColumn(
-        "dist", F.lit(0)
+    spark = df.sparkSession
+    spread = shuffle_partitions(spark)
+    cand = _candidate_name_pairs_sql("{recs}", "_nm", block_cols, cap, spread)
+    return lifecycle.sql(
+        spark,
+        _expand_sql(
+            _verified_sql(cand, 0, max_dist),
+            "{recs}", "_id", "_nm", block_cols, ["dist"], spread, pair_ids,
+        )
+        + " UNION ALL "
+        + _same_name_sql("{recs}", "_id", "_nm", block_cols, True, pair_ids),
+        recs=recs,
     )
-    return expanded.unionByName(same)
+
+
+def _verified_sql(cand: str, lo: int, max_dist: int) -> str:
+    """The candidate pairs ``cand`` with their banded levenshtein
+    ``dist``, kept when it lies in [lo, max_dist] (a subquery text)."""
+    return f"""(
+      SELECT * FROM (SELECT *, levenshtein(name_a, name_b, {max_dist}) AS dist FROM {cand})
+      WHERE dist BETWEEN {lo} AND {max_dist}
+    )"""
 
 
 def edit_complete_matches(
@@ -925,41 +756,44 @@ def edit_complete_matches(
     max_dist: int = 2,
     max_id_pairs: int | None = 1_000_000_000,
     n_rows: int | None = None,
+    pair_ids: tuple[str, str] = ("id_a", "id_b"),
 ) -> DataFrame:
     """Like ``pigeonhole_matches`` but INDEL-COMPLETE: candidates come
-    from ``_shifted_candidate_name_pairs`` (PassJoin-style shifted
-    probes), so every in-block pair within levenshtein ``max_dist``
-    — substitutions AND insert/deletes — is found. The two-phase
-    collapse/expand architecture is unchanged: all shifted-probe work
-    runs once per DISTINCT (block, name); the ×5-per-level shift
-    multiplier is the documented price of completeness over
-    ``pigeonhole_matches``. Only max_dist=2 is supported (the lane
-    geometry — 3 segments, ±2 shifts — encodes the budget).
+    from ``_shifted_candidates`` (PassJoin-style shifted probes), so
+    every in-block pair within levenshtein ``max_dist`` — substitutions
+    AND insert/deletes — is found. The two-phase collapse/expand
+    architecture is unchanged: all shifted-probe work runs once per
+    DISTINCT (block, name); the ×5-per-level shift multiplier is the
+    documented price of completeness over ``pigeonhole_matches``. Only
+    max_dist=2 is supported (the lane geometry — 3 segments, ±2 shifts
+    — encodes the budget).
 
     ``max_id_pairs`` (default 1e9): same duplicate-regime pre-flight
     guard as ``pigeonhole_matches`` — raises ``IdPairBudgetExceeded``
     instead of a quadratic disk-filling expansion (None disables);
     same ``n_rows`` zero-job gate (footer count with C(n, 2) within
-    budget skips the pre-flight aggregate)."""
+    budget skips the pre-flight aggregate) and ``pair_ids``."""
     if max_dist != 2:
         raise ValueError("edit_complete_matches encodes max_dist=2 lanes")
-    recs = df.select(
-        F.col(id_col).alias("_id"), F.col(name_col).alias("_nm"), *block_cols
-    )
+    recs = _records(df, id_col, name_col, block_cols)
     if max_id_pairs is not None:
         _preflight_id_pair_budget(
             recs, "_nm", block_cols, max_id_pairs, "edit_complete_matches",
             n_rows=n_rows,
         )
-    cand = _shifted_candidate_name_pairs(recs, "_nm", block_cols, cap)
-    verified = cand.withColumn(
-        "dist", F.levenshtein("name_a", "name_b", max_dist)
-    ).filter(F.col("dist").between(0, max_dist))
-    expanded = _expand_to_ids(recs, "_id", "_nm", block_cols, verified)
-    same = _same_name_pairs(recs, "_id", "_nm", block_cols).withColumn(
-        "dist", F.lit(0)
+    spark = df.sparkSession
+    cand, frames = _shifted_candidates(recs, "_nm", block_cols, cap)
+    return lifecycle.sql(
+        spark,
+        _expand_sql(
+            _verified_sql(cand, 0, max_dist),
+            "{recs}", "_id", "_nm", block_cols, ["dist"], shuffle_partitions(spark), pair_ids,
+        )
+        + " UNION ALL "
+        + _same_name_sql("{recs}", "_id", "_nm", block_cols, True, pair_ids),
+        recs=recs,
+        **frames,
     )
-    return expanded.unionByName(same)
 
 
 def edit_match_stats(
@@ -977,10 +811,10 @@ def edit_match_stats(
     (39B pairs on the replicated sf100 corpus, SCALE.md "er2 at sf10").
 
     Counting instead of expanding: with the indel-complete candidate
-    set (``_shifted_candidate_name_pairs``) verified at the DISTINCT
-    (block, name) level, the number of record pairs a verified name
-    pair (a, b) contributes is cnt(a) x cnt(b), and each duplicated
-    name contributes C(cnt, 2) distance-0 pairs. Both are equi-joins
+    set (``_shifted_candidates``) verified at the DISTINCT (block,
+    name) level, the number of record pairs a verified name pair
+    (a, b) contributes is cnt(a) x cnt(b), and each duplicated name
+    contributes C(cnt, 2) distance-0 pairs. Both are equi-joins
     against the distinct-name count table — the record-level fan-out
     (the one phase whose output grows with the SQUARE of replication)
     never happens. Output is one row per block that has at least one
@@ -993,59 +827,44 @@ def edit_match_stats(
     lane geometry)."""
     if max_dist != 2:
         raise ValueError("edit_match_stats encodes max_dist=2 lanes")
-    recs = df.select(
-        F.col(id_col).alias("_id"), F.col(name_col).alias("_nm"), *block_cols
+    recs = _records(df, id_col, name_col, block_cols)
+    cand, frames = _shifted_candidates(recs, "_nm", block_cols, cap)
+    blocks = _cols(block_cols)
+    name_counts = (
+        f"(SELECT {blocks}, _nm, count(1) AS _cnt FROM {{recs}} GROUP BY {blocks}, _nm)"
     )
-    name_counts = recs.groupBy(*block_cols, "_nm").agg(
-        F.count(F.lit(1)).alias("_cnt")
+
+    def counts(s: str) -> str:
+        return (
+            f"(SELECT {_cols(block_cols, alias=f'_b{s}_')}, _nm AS _n{s},"
+            f" _cnt AS _cnt_{s} FROM {name_counts}) c{s}"
+        )
+
+    def on(s: str) -> str:
+        return " AND ".join(
+            [f"c{s}.{_q(f'_b{s}_{b}')} = v.{_q(b)}" for b in block_cols]
+            + [f"c{s}._n{s} = v.name_{s}"]
+        )
+
+    by_dist = ", ".join(
+        f"CAST(sum(CASE WHEN dist = {d} THEN pairs ELSE 0 END) AS BIGINT) AS pairs_d{d}"
+        for d in range(max_dist + 1)
     )
-    cand = _shifted_candidate_name_pairs(recs, "_nm", block_cols, cap)
     # name_a < name_b => distinct names => dist >= 1
-    verified = cand.withColumn(
-        "dist", F.levenshtein("name_a", "name_b", max_dist)
-    ).filter(F.col("dist").between(1, max_dist))
-    ca = name_counts.select(
-        *[F.col(b).alias(f"_ba_{b}") for b in block_cols],
-        F.col("_nm").alias("_na"),
-        F.col("_cnt").alias("_cnt_a"),
+    return lifecycle.sql(
+        df.sparkSession,
+        f"""
+    SELECT {blocks}, {by_dist}, CAST(sum(pairs) AS BIGINT) AS pairs_total
+    FROM (
+      SELECT {', '.join(f'v.{_q(b)}' for b in block_cols)}, v.dist,
+             ca._cnt_a * cb._cnt_b AS pairs
+      FROM {_verified_sql(cand, 1, max_dist)} v
+      JOIN {counts('a')} ON {on('a')} JOIN {counts('b')} ON {on('b')}
+      UNION ALL
+      SELECT {blocks}, 0 AS dist, CAST(_cnt * (_cnt - 1) / 2 AS BIGINT) AS pairs
+      FROM {name_counts} WHERE _cnt > 1
     )
-    cb = name_counts.select(
-        *[F.col(b).alias(f"_bb_{b}") for b in block_cols],
-        F.col("_nm").alias("_nb"),
-        F.col("_cnt").alias("_cnt_b"),
-    )
-    cross = (
-        verified.join(
-            ca,
-            [F.col(f"_ba_{b}") == F.col(b) for b in block_cols]
-            + [F.col("_na") == F.col("name_a")],
-        )
-        .join(
-            cb,
-            [F.col(f"_bb_{b}") == F.col(b) for b in block_cols]
-            + [F.col("_nb") == F.col("name_b")],
-        )
-        .select(
-            *block_cols,
-            "dist",
-            (F.col("_cnt_a") * F.col("_cnt_b")).alias("pairs"),
-        )
-    )
-    same = name_counts.filter(F.col("_cnt") > 1).select(
-        *block_cols,
-        F.lit(0).alias("dist"),
-        (F.col("_cnt") * (F.col("_cnt") - 1) / 2).cast("long").alias("pairs"),
-    )
-    return (
-        cross.unionByName(same)
-        .groupBy(*block_cols)
-        .agg(
-            *[
-                F.sum(F.when(F.col("dist") == d, F.col("pairs")).otherwise(0))
-                .cast("long")
-                .alias(f"pairs_d{d}")
-                for d in range(max_dist + 1)
-            ],
-            F.sum("pairs").cast("long").alias("pairs_total"),
-        )
+    GROUP BY {blocks}""",
+        recs=recs,
+        **frames,
     )

@@ -99,3 +99,22 @@ def view_name(spark: SparkSession, prefix: str) -> str:
     name = f"{prefix}_{uuid.uuid4().hex[:12]}"
     _on_exit(lambda: spark.catalog.dropTempView(name))
     return name
+
+
+def sql(spark: SparkSession, text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(text, **frames)``: each ``{name}`` in ``text`` reads
+    the frame passed as ``name``, bound as a temp view for the analysis
+    only. pyspark's own binding drops its views through
+    ``Catalog.dropTempView``, which also uncaches the view's plan: a
+    frame persisted by an earlier statement lost its cache entry, and
+    every read of it recomputed the frame. These views are dropped from
+    the session catalog alone, so a persisted frame stays cached."""
+    names = {k: f"_graft_{k}_{uuid.uuid4().hex[:12]}" for k in frames}
+    try:
+        for k, df in frames.items():
+            df.createOrReplaceTempView(names[k])
+        return spark.sql(text.format(**names))
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names.values():
+            catalog.dropTempView(name)

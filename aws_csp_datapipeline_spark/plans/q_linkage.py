@@ -232,12 +232,7 @@ def er2_scale_safe_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         # C(n, 2) fits the budget (ADVICE r10: the guard was itself a
         # hidden eager action on corpora that can't blow up)
         n_rows=table_row_count(sf_dir, "customer"),
-    ).select(
-        F.col("id_a").alias("custkey_a"),
-        F.col("id_b").alias("custkey_b"),
-        "name_a",
-        "name_b",
-        "dist",
+        pair_ids=("custkey_a", "custkey_b"),
     )
 
 
@@ -267,7 +262,7 @@ def er3_indel_complete_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Indel-COMPLETE entity resolution: every in-block pair within
     levenshtein 2 — substitutions AND insert/deletes — via
     PassJoin-style shifted probes (functions/linkage.py
-    ``_shifted_candidate_name_pairs``). Closes er2's documented
+    ``_shifted_candidates``). Closes er2's documented
     2.6%-at-sf0.1 indel gap: measured er3 ≡ er1-full exactly (zero
     missed, zero extra) at sf0.001/0.01/0.1.
 
@@ -286,7 +281,7 @@ def er3_indel_complete_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment", "c_name"
     )
-    matches = edit_complete_matches(
+    return edit_complete_matches(
         c,
         "c_custkey",
         "c_name",
@@ -294,13 +289,7 @@ def er3_indel_complete_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         cap=_ER2_CAP,
         max_dist=2,
         n_rows=table_row_count(sf_dir, "customer"),
-    )
-    return matches.select(
-        F.col("id_a").alias("custkey_a"),
-        F.col("id_b").alias("custkey_b"),
-        "name_a",
-        "name_b",
-        "dist",
+        pair_ids=("custkey_a", "custkey_b"),
     )
 
 
@@ -395,24 +384,21 @@ def er4_match_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     in replication) does not exist in this plan."""
     from aws_csp_datapipeline_spark.functions.linkage import edit_match_stats
 
+    # the block columns get their output names on the input: a select
+    # over the built plan would re-analyse all of it
     c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey", "c_mktsegment", "c_name"
+        "c_custkey",
+        F.col("c_nationkey").alias("nationkey"),
+        F.col("c_mktsegment").alias("mktsegment"),
+        "c_name",
     )
-    stats = edit_match_stats(
+    return edit_match_stats(
         c,
         "c_custkey",
         "c_name",
-        ["c_nationkey", "c_mktsegment"],
+        ["nationkey", "mktsegment"],
         cap=_ER2_CAP,
         max_dist=2,
-    )
-    return stats.select(
-        F.col("c_nationkey").alias("nationkey"),
-        F.col("c_mktsegment").alias("mktsegment"),
-        "pairs_d0",
-        "pairs_d1",
-        "pairs_d2",
-        "pairs_total",
     )
 
 

@@ -24,13 +24,16 @@ one untimed run first.
 
 Warm/cold contract. Warm across reps (built once per session and
 reused by every later build): ``catalog.load_table`` plan handles,
-``exprcache`` expression trees and s1's query vector
-(``similarity.query_vector``), besides the JVM's JIT and the OS page
-cache. Cold in every sample: table data (every action scans parquet)
-and every persisted intermediate (``clearCache()`` unpersists them,
-so CacheManager plan dedup cannot serve a rep, or a same-plan
-sibling, from an earlier one). ``tests/test_bench_contract.py`` pins
-the cold half.
+``exprcache`` expression trees, s1's query vector
+(``similarity.query_vector``) and Spark's generated classes (the
+session's codegen cache holds the headline's working set, so a
+query's second rep compiles none — ``codegen_compiles`` in its
+``layers``), besides the JVM's JIT and the OS page cache. Cold in
+every sample: table data (every action scans parquet) and every
+persisted intermediate (``clearCache()`` unpersists them, so
+CacheManager plan dedup cannot serve a rep, or a same-plan sibling,
+from an earlier one). ``tests/test_bench_contract.py`` pins
+the cold half and the generated classes.
 
 Single-run timings at this scale are dominated by machine noise
 (SCALE.md "Bench variance": ±20 % totals and up to 65 % per query on
@@ -44,9 +47,10 @@ group is read back through ``perfbench/layers.py``: ``layers[name]``
 holds the per-key median over reps of ``build_s`` (plan construction
 in Python/py4j), the group's jobs, stages, skipped stages, tasks,
 task seconds, shuffle MB and spill MB (``exec_s`` is the time during
-which its jobs ran) and the Catalyst analysis, optimization and
-planning times of the forced plan. The last rep also prints one line
-per stage to stderr.
+which its jobs ran), the Catalyst analysis, optimization and
+planning times of the forced plan and ``codegen_compiles``, the
+classes Spark generated and compiled during the sample. The last rep
+also prints one line per stage to stderr.
 
 Those reads come from Spark's status store, which evicts stages past
 ``spark.ui.retainedStages``, SKIPPED ones first and including those of
@@ -189,10 +193,17 @@ def force(df):
     return fdf, fdf.collect()[0][0]
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Spark has generated and compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def sample(spark, fn, sf_dir: str, group: str) -> tuple[float, dict]:
     """One cold sample of query ``fn`` in job group ``group``: its
     seconds, then its layer numbers, read after the clock stops."""
     spark.sparkContext.setJobGroup(group, group)
+    compiled = codegen_compiles(spark)
     t0 = time.perf_counter()
     spark.catalog.clearCache()
     tb = time.perf_counter()
@@ -200,7 +211,11 @@ def sample(spark, fn, sf_dir: str, group: str) -> tuple[float, dict]:
     build_s = time.perf_counter() - tb
     fdf, _ = force(df)
     dt = time.perf_counter() - t0
-    layer = {"build_s": build_s, **catalyst_phases(fdf)}
+    layer = {
+        "build_s": build_s,
+        "codegen_compiles": codegen_compiles(spark) - compiled,
+        **catalyst_phases(fdf),
+    }
     try:
         stats = job_group_stats(spark, group)
     except Py4JJavaError as e:

@@ -87,3 +87,52 @@ def test_reads_the_end_of_a_cut_bench_line(tmp_path, keep):
     assert set(queries.values()) == {1.375}  # the median, not the min
     if keep != 2000:
         assert len(queries) == len(bench.HEADLINE)
+
+
+@pytest.mark.parametrize("old_has_layers", [True, False])
+def test_prints_the_layers_of_the_top_movers(tmp_path, monkeypatch, capsys, old_has_layers):
+    """With ``layers`` in both records, the top-N movers (either way)
+    get their old and new build_s, jobs and codegen_compiles; a record
+    without ``layers`` still compares, with no layer lines."""
+    from tools import bench_compare
+
+    def capture(name, times, layers):
+        rec = {"queries": times, "queries_median": times}
+        if layers:
+            rec["layers"] = layers
+        p = tmp_path / name
+        p.write_text(json.dumps(rec) + "\n")
+        return str(p)
+
+    def layer(build_s, jobs, compiles=None):
+        out = {"build_s": build_s, "jobs": jobs, "exec_s": 1.0}
+        if compiles is not None:
+            out["codegen_compiles"] = compiles
+        return out
+
+    old = capture(
+        "old.out",
+        {"er3": 2.0, "q1": 1.0, "d10": 1.0},
+        {"er3": layer(1.25, 15), "q1": layer(0.1, 2), "d10": layer(0.3, 10)}
+        if old_has_layers else None,
+    )
+    new = capture(
+        "new.out",
+        {"er3": 1.0, "q1": 1.02, "d10": 1.5},
+        {"er3": layer(0.5, 15, 0), "q1": layer(0.1, 2, 0), "d10": layer(0.25, 10, 3)},
+    )
+    monkeypatch.setattr("sys.argv", ["bench_compare", old, new, "--top", "2"])
+    bench_compare.main()
+    out = capsys.readouterr().out.splitlines()
+    assert any(line.split()[-1] == "q1" for line in out)  # the ratio table
+    rows = {
+        line.split()[0]: line.split()[1:]
+        for line in out
+        if " -> " in line and not line.startswith("query")
+    }
+    if not old_has_layers:
+        assert rows == {}
+        return
+    assert set(rows) == {"er3", "d10"}
+    assert rows["er3"] == ["1.25", "->", "0.5", "15", "->", "15", "-", "->", "0"]
+    assert rows["d10"] == ["0.3", "->", "0.25", "10", "->", "10", "-", "->", "3"]

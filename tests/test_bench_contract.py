@@ -3,7 +3,8 @@ forced run and ``clearCache()`` nothing the sample made is persisted —
 no new RDD in ``getPersistentRDDs()`` and an empty CacheManager — so a
 later rep cannot be served from an earlier one, and a rebuild
 reproduces the first run's hash. (An RDD an earlier test left for JVM
-GC to collect is not the sample's.)"""
+GC to collect is not the sample's.) Spark's generated classes are the
+warm half: a repeated sample compiles none."""
 
 from __future__ import annotations
 
@@ -44,7 +45,9 @@ def test_sample_keeps_its_time_when_its_stages_left_the_status_store(
     )
     dt, layer = bench.sample(spark, queries()["q1_pricing_summary"], sf_smoke, "bench-evicted")
     assert dt > 0
-    assert set(layer) == {"build_s", "analysis_ms", "optimization_ms", "planning_ms"}
+    assert set(layer) == {
+        "build_s", "codegen_compiles", "analysis_ms", "optimization_ms", "planning_ms"
+    }
 
 
 def test_layer_medians_skip_missing_samples():
@@ -64,7 +67,37 @@ def test_stage_lines_name_each_stage(spark, sf_smoke, capsys):
     from aws_csp_datapipeline_spark.plans.registry import queries
 
     bench.sample(spark, queries()["a5_group_count_2key"], sf_smoke, "bench-stages")
+    # only print_stages' lines: the sample itself notes on stderr when
+    # a status-store cleanup evicted its stages mid-run
+    capsys.readouterr()
     bench.print_stages(spark, "a5", "bench-stages")
     lines = capsys.readouterr().err.splitlines()
     assert lines and all(line.startswith("# a5 stage ") for line in lines)
     assert any("ms " in line and "Exchange" in line for line in lines)
+
+
+def test_second_rep_compiles_no_classes(spark, sf_smoke):
+    from aws_csp_datapipeline_spark.plans.registry import queries
+
+    fn = queries()["q1_pricing_summary"]
+    reps = [bench.sample(spark, fn, sf_smoke, f"bench-codegen-{i}")[1] for i in range(2)]
+    assert all("codegen_compiles" in layer for layer in reps)
+    assert reps[1]["codegen_compiles"] == 0
+
+
+def test_curation_pass_fits_the_codegen_cache(spark, sf_smoke):
+    """One er3 + inc3 pass generates more classes (~111) than Spark's
+    default codegen cache holds (100), so with that default every pass
+    evicted its own classes and recompiled ~88 of them. The session's
+    cache holds the working set: a repeated pass compiles none."""
+    from aws_csp_datapipeline_spark.plans.registry import queries
+
+    qs = queries()
+    compiled = []
+    for i in range(2):
+        before = bench.codegen_compiles(spark)
+        for name in ("er3_indel_complete_matches", "inc3_incremental_semdedup"):
+            bench.sample(spark, qs[name], sf_smoke, f"bench-thrash-{name}-{i}")
+        compiled.append(bench.codegen_compiles(spark) - before)
+    spark.catalog.clearCache()
+    assert compiled[1] == 0, compiled

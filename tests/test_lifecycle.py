@@ -52,3 +52,19 @@ def test_release_checkpoint_frees_what_unpersist_leaves(spark):
     lifecycle.release_checkpoint(df)
     assert not persistent_rdds(spark) - before
     lifecycle.release_checkpoint(spark.range(3))  # any other frame: a no-op
+
+
+def test_sql_keeps_a_bound_persisted_frame_cached(spark):
+    """A persisted frame bound into SQL text is read from its cache,
+    and no binding view outlives the call. (pyspark's own
+    ``spark.sql(text, **frames)`` uncaches such a frame when it drops
+    its view.)"""
+    spark.catalog.clearCache()
+    tables = catalog_tables(spark)
+    with lifecycle.scope():
+        kept = lifecycle.persist(spark.range(50).selectExpr("id", "id % 5 AS k"))
+        q = lifecycle.sql(spark, "SELECT k FROM {kept} WHERE id > 3", kept=kept)
+        assert "InMemoryRelation" in q._jdf.queryExecution().withCachedData().toString()
+        assert kept.is_cached and q.count() == 46
+    assert catalog_tables(spark) == tables
+    assert cache_is_empty(spark)

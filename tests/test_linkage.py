@@ -383,3 +383,38 @@ def test_id_pair_budget_preflight_zero_job_gate():
         )
     with pytest.raises(AttributeError):
         _preflight_id_pair_budget(None, "_nm", ["blk"], 100, "op")
+
+
+def test_er3_warm_build_budget(spark, sf_oracle, monkeypatch):
+    """A warm er3 build is a few SQL statements over bound frames: at
+    most 400 py4j commands and no Spark job. The DataFrame-chain build
+    it replaced issued ~3,400 commands (most of them pyspark's per-call
+    query-context capture) and re-analysed its growing plan per call."""
+    from py4j.java_gateway import GatewayClient
+
+    from aws_csp_datapipeline_spark import lifecycle
+    from aws_csp_datapipeline_spark.plans.q_linkage import (
+        er3_indel_complete_matches,
+    )
+
+    with lifecycle.scope():
+        er3_indel_complete_matches(spark, sf_oracle)  # warm: footers, memos
+    sent = []
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        sent.append(1)
+        return send(self, *args, **kwargs)
+
+    sc = spark.sparkContext
+    group = "er3-build-budget"
+    sc.setJobGroup(group, group)
+    try:
+        with lifecycle.scope():
+            monkeypatch.setattr(GatewayClient, "send_command", counting)
+            er3_indel_complete_matches(spark, sf_oracle)
+            monkeypatch.undo()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sent) <= 400, len(sent)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -41,7 +41,7 @@ def test_er2_lane_exchange_is_reused(no_aqe, sf_oracle):
         "er2's fk self-join sides must stay canonically identical "
         "(alias every column on BOTH sides, join on fk + block cols) "
         "so the lane pipeline is computed once — see "
-        "linkage._candidate_name_pairs"
+        "linkage._candidate_name_pairs_sql"
     )
     # the lane Generate (the ×9 explode) must appear exactly once —
     # a second one means a side stopped reusing and rebuilt the lanes

@@ -9,7 +9,9 @@ OLD and NEW may be a ``python bench.py`` stdout capture, a repo-format
 record (the bench.py JSON) or a round record ``BENCH_r{N}.json``
 (its ``parsed`` block, or the JSON line embedded in its stdout
 ``tail``). Per-query times are the medians when a record has them,
-the mins otherwise.
+the mins otherwise. When both records carry bench.py's ``layers``,
+the top-N movers (largest time ratio either way) also get their old
+and new ``build_s``, ``jobs`` and ``codegen_compiles``.
 
 Raw round-over-round ratios on one host are dominated by machine
 noise (SCALE.md "Bench variance": ±35 % swings), so a code change is
@@ -34,6 +36,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import re
 import statistics
 
@@ -102,6 +105,31 @@ def summarize(frozen: dict, current: dict, record: dict | None) -> dict:
     return summary
 
 
+LAYER_KEYS = ("build_s", "jobs", "codegen_compiles")
+
+
+def layer_lines(old: dict, new: dict, names: list[str]) -> list[str]:
+    """One line per query in ``names``: its old -> new value of each of
+    ``LAYER_KEYS`` ("-" where a record lacks it). Empty unless both
+    records carry ``layers``."""
+    ol, nl = old.get("layers"), new.get("layers")
+    if not (ol and nl):
+        return []
+
+    def cell(layer: dict, key: str) -> str:
+        v = layer.get(key)
+        return "-" if v is None else f"{v:g}"
+
+    lines = [f"{'query':<36}" + "".join(f"  {k + ' old -> new':>26}" for k in LAYER_KEYS)]
+    for n in names:
+        o, w = ol.get(n, {}), nl.get(n, {})
+        lines.append(
+            f"{n:<36}"
+            + "".join(f"  {cell(o, k) + ' -> ' + cell(w, k):>26}" for k in LAYER_KEYS)
+        )
+    return lines
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("old")
@@ -138,6 +166,11 @@ def main() -> None:
     gained = [r for r in rows if r[0] < 0.9]
     if gained:
         print(f"...and {len(gained)} queries at <0.9x (improved)")
+    movers = sorted(
+        rows, key=lambda r: abs(math.log(r[0])) if 0 < r[0] < math.inf else math.inf, reverse=True
+    )
+    for line in layer_lines(old, new, [n for _, n in movers[: args.top]]):
+        print(line)
 
     if args.out:
         out = {
