@@ -481,22 +481,14 @@ def _minhash_array(sh: DataFrame, k: int, hash: str = "xxhash64") -> DataFrame:
     permutation), then each permutation is an integer universal hash
     (a_j·x + b_j) mod 2^31 — k multiply-adds per shingle. Products
     stay < 2^62 so ANSI-mode long arithmetic never overflows."""
-    # static literal params — built as ONE cached parsed expression:
-    # k structs through the Column API cost ~3 py4j round-trips each
-    # (~0.3 s of pure driver chatter per plan build at k=100); the
-    # SQL text parses JVM-side once per k (the seed is always the
-    # default) and is memoized
-    # (r13, guide §5 driver-side plan build)
-    from aws_csp_datapipeline_spark.exprcache import cached_column
-
-    params = cached_column(
-        ("minhash_params", k),
-        lambda: F.expr(
-            "array(" + ",".join(
-                f"named_struct('a', {a}L, 'b', {b}L)"
-                for a, b in _perm_constants(k)
-            ) + ")"
-        ),
+    # static literal params as ONE parsed SQL expression: k structs
+    # through the Column API cost ~3 py4j round-trips each (~0.3 s of
+    # driver chatter per plan build at k=100); one JVM parse of the
+    # text takes under 1 ms
+    params = F.expr(
+        "array(" + ",".join(
+            f"named_struct('a', {a}L, 'b', {b}L)" for a, b in _perm_constants(k)
+        ) + ")"
     )
 
     def sig_of(hs):
@@ -737,21 +729,16 @@ def minhash_lsh_pairs(
     else:
         band_src = sig
     # static band-key structs over the fixed internal column name
-    # `mhs` — cached parsed expression, same rationale as the
+    # `mhs` as one parsed SQL expression, same rationale as the
     # minhash params (bands × (r element_at + xxhash64) Column calls
     # were ~0.2 s of py4j chatter per build)
-    from aws_csp_datapipeline_spark.exprcache import cached_column
-
-    band_cols = cached_column(
-        ("lsh_band_cols", bands, r),
-        lambda: F.expr(
-            "array(" + ",".join(
-                f"named_struct('band', {b}, 'key', xxhash64("
-                + ",".join(f"element_at(mhs, {b * r + i + 1})" for i in range(r))
-                + "))"
-                for b in range(bands)
-            ) + ")"
-        ),
+    band_cols = F.expr(
+        "array(" + ",".join(
+            f"named_struct('band', {b}, 'key', xxhash64("
+            + ",".join(f"element_at(mhs, {b * r + i + 1})" for i in range(r))
+            + "))"
+            for b in range(bands)
+        ) + ")"
     )
     banded = band_src.select("doc", F.explode(band_cols).alias("bk")).select(
         "doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from aws_csp_datapipeline_spark import lifecycle
-from aws_csp_datapipeline_spark.parallelism import ensure_min_parallelism, spread_width
+from aws_csp_datapipeline_spark.parallelism import ensure_min_parallelism
 
 
 def _as_double(col: Column) -> Column:
@@ -520,7 +520,10 @@ def _cells_and_units(
     MEMORY_AND_DISK because the table feeds 2-3 consumers per query;
     released when the caller's ``lifecycle.scope()`` exits (outside
     one, at ``clearCache``). Built as one SQL statement over ``df``
-    (two around a KMeans transform)."""
+    (two around a KMeans transform), read in its own scan layout: a
+    width-8 round-robin spread here cost inc3 2 jobs and 72 tasks and
+    d10 1 job and 43 tasks at sf0.1 on 4 cores, and measured no faster
+    (BENCH_sf0.1_semdedup_spread.json)."""
     spark = df.sparkSession
     bucket = " + ".join(
         f"CASE WHEN element_at(__v, {i + 1}) > 0 THEN {1 << (sign_bits - 1 - i)} ELSE 0 END"
@@ -531,17 +534,8 @@ def _cells_and_units(
         "element_at(transform(array(named_struct('v', __v, 'n', "
         f"sqrt({dot_sql('__v', '__v')}))), s -> transform(s.v, e -> e / s.n)), 1)"
     )
-    # Spread to a SMALL fixed width, not the core count (r13,
-    # VERDICT r12 item 6): the r12 full-width spread parallelized
-    # the per-row norm/quantize work but measured d10 1.07×, inc3
-    # 1.42× SLOWER at sf0.1 — a 32-block cache taxes every
-    # downstream cache-read stage with tiny-task overhead. 8 blocks
-    # keeps the normalize off a single core while the cache stays
-    # coarse; the spread is skipped on layouts that already scan ≥8
-    # tasks, so no exchange is added at scale.
-    width = spread_width(df, min_partitions=8)
     src = (
-        f"SELECT {f'/*+ REPARTITION({width}) */ ' if width else ''}`{id_col}` AS __id,"
+        f"SELECT `{id_col}` AS __id,"
         f" transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS __v FROM {{df}}"
     )
     if ivf_cells > 0:

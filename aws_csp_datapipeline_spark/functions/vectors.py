@@ -58,28 +58,19 @@ def random_projection(vec: Column, signs: list[list[float]]) -> list[Column]:
     float embeddings become k-d at 8× less compute per distance.
     Rounded at 4 decimals (+0.0 folds IEEE -0.0) per the repo float
     discipline."""
-    from aws_csp_datapipeline_spark.exprcache import cached_column
-
     v = _as_double(vec)
     k = len(signs)
 
-    def _sign_arr(row: tuple) -> "Column":
-        # k×in_dim literal sign entries through the Column API cost
-        # ~2 py4j round-trips each (~0.4 s per plan build at 8×64);
-        # one cached parsed array per row is 0 after the first build
-        # (r13, guide §5). Keyed by the row VALUES — rademacher_signs
-        # is deterministic but callers may pass any matrix.
-        return cached_column(
-            ("rademacher_row", row),
-            lambda: F.expr(
-                "array(" + ",".join(f"{s!r}D" for s in row) + ")"
-            ),
-        )
+    def _sign_arr(row) -> Column:
+        # one parsed literal array per row: k×in_dim sign entries
+        # through the Column API cost ~2 py4j round-trips each (~0.4 s
+        # per plan build at 8×64)
+        return F.expr("array(" + ",".join(f"{s!r}D" for s in row) + ")")
 
     return [
         (
             F.round(
-                dot(v, _sign_arr(tuple(row))) / F.sqrt(F.lit(float(k))),
+                dot(v, _sign_arr(row)) / F.sqrt(F.lit(float(k))),
                 4,
             )
             + F.lit(0.0)

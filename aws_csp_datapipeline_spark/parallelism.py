@@ -141,17 +141,7 @@ def gate_after_spread(cond: Column) -> Column:
 def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin repartition ``df`` up to ``min_partitions`` (default:
     the session's core count) — a no-op when the input layout already
-    guarantees at least that many scan tasks (``spread_width``)."""
-    width = spread_width(df, min_partitions)
-    return df if width is None else df.repartition(width)
-
-
-def spread_width(df: DataFrame, min_partitions: int | None = None) -> int | None:
-    """The partition count ``ensure_min_parallelism`` spreads ``df``
-    to — ``min_partitions``, default the session's core count — or
-    None when the input layout already guarantees at least that many
-    scan tasks. SQL-text builders put a non-None width in a
-    ``REPARTITION`` hint.
+    guarantees at least that many scan tasks.
 
     The decision reads ``df.inputFiles()`` (driver-side listing on the
     analyzed plan — no physical planning, no job) plus, for few LOCAL
@@ -179,20 +169,20 @@ def spread_width(df: DataFrame, min_partitions: int | None = None) -> int | None
     except Exception:
         files = []
     if len(files) >= target:
-        return None
+        return df
     if files and any(not f.startswith("file:") for f in files):
-        return None
+        return df
     if files:
         try:
             if _estimated_local_scan_tasks(spark, files) >= target:
-                return None
+                return df
         except OSError:
             pass  # unreadable path metadata: fall through to repartition
-        return target
+        return df.repartition(target)
     # No listable input files: in-memory relation (or listing failed).
     try:
         if df.rdd.getNumPartitions() >= target:
-            return None
+            return df
     except Exception:
         pass
-    return target
+    return df.repartition(target)

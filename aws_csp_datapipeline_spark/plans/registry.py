@@ -62,47 +62,41 @@ def register(name: str, oracle: str | None = None, oracle_sf_max: float | None =
 # sample (CRUD, cleaning, dedup, text, similarity, streaming, sampling,
 # window, as-of, pattern, graph, quality, core analytics) rather than the
 # module-import order, which would front-load the analytics block.
-# Every name here is oracle-paired except the rows-only streaming checks.
 #
-# The window ROTATES each round: ~30 core names stay fixed so the external
-# record keeps longitudinal coverage of every family, and the tail swaps in
-# queries the driver has never attested (rounds 2-4 shipped an identical
-# window, so 163 of 213 registry queries had only in-repo pytest attestation).
-# Round 6 rotates in the base projection/filter block (p3-p9), the scalar
-# aggregates (a1-a9), outer/null-safe joins (j4-j6), the remaining set ops
-# (set2/set3), and m5 — none of which had ever been driver-attested.
-# Everything rotated OUT stays green in tests/test_registry_oracle.py
-# (same DuckDB compare, all 200+ queries).
+# The window ROTATES: a fixed core keeps the external record's
+# longitudinal coverage of every family, then come the names the driver
+# has never hash-checked, and attested names fill the rest. Everything
+# rotated OUT stays green in tests/test_registry_oracle.py (same DuckDB
+# compare, every oracle-paired query). tests/test_registry_window.py
+# asserts every registry name is driver-attested (appears in a
+# committed CORRECTNESS_r*.json) or in this window, so attestation debt
+# cannot accrue silently when lanes are added.
 #
-# Round-13 rotation queue — machine-computed in r12. After the r12
-# window below lands, every registry name has at least one driver
-# record; what remains is the ORACLE-UPGRADE tail: 8 names whose last
-# driver record predates their oracle pairing (their record says
-# `no_oracle` but a hash oracle now exists, so the driver has never
-# hash-checked them): a20_cms_heavy_hitters (r12's exactness-window
-# upgrade), dq14_file_manifest, t5_winnow_fingerprints,
-# mm1_media_features, mm5_audio_features, mm6_video_meta,
-# mm7_image_dhash_groups, mm8_image_neardup_pairs. Plus the r12
-# additions gr9_neighbor_jaccard_estimate, ml3_roc_auc,
-# ml4_score_reliability, ml5_threshold_sweep,
-# ml6_best_operating_point, ml7_scorer_auc, ml8_pr_auc,
-# tt17_purged_time_split, tt18_epoch_expansion,
-# tt19_scaling_law_subsets, and st11_stream_gate_monitor (new lanes
-# get a first-round slot). Rotate these 19 in for r13 and restore the
-# d3/s1/x1 core names; 13 lanes remain
-# rows-only BY DESIGN (index/sketch/stream/BPE-internal outputs plus
-# one transcendental-key sampler: pipe3, a9, a17, s3, s5, s18, s19,
-# s20, st9, t17, t18, pipe5, tt20 — tt20's E-S ranking key is
-# log(u)/w, and IEEE leaves log's last ulp engine-specific), each
-# with a behavioral pytest in lieu of a SQL oracle.
-#
-# NEXT_WINDOW_QUEUE is the machine-checkable form of the paragraph
-# above: tests/test_registry_window.py asserts every registry name is
-# either driver-attested (appears in a committed CORRECTNESS_r*.json),
-# in the current _WINDOW, or in this queue — so attestation debt
-# cannot accrue silently when lanes are added mid-round.
-NEXT_WINDOW_QUEUE: tuple[str, ...] = (
-    # oracle-upgrade tail (last driver record predates the oracle)
+# 13 lanes stay rows-only BY DESIGN (index/sketch/stream/BPE-internal
+# outputs plus one transcendental-key sampler: pipe3, a9, a17, s3, s5,
+# s18, s19, s20, st9, t17, t18, pipe5, tt20 — tt20's E-S ranking key is
+# log(u)/w, and IEEE leaves log's last ulp engine-specific), each with
+# a behavioral pytest in lieu of a SQL oracle.
+_WINDOW: tuple[str, ...] = (
+    # --- fixed core ---
+    "q1_pricing_summary",
+    "m1_serial_insert",
+    "m4_soft_delete_visible",
+    "f7_messy_dates",
+    "d1_exact_dedup",
+    "d3_minhash_lsh_pairs",
+    "t1_token_stats",
+    "s1_cosine_topk",
+    "st1_stream_ingest_dedup",
+    "tt1_hash_split",
+    "w1_topk_per_group",
+    "x1_asof_join",
+    "gr1_triangle_count",
+    "dq1_column_profile",
+    "pipe4_full_curation",
+    # --- oracle-upgrade tail: the last driver record predates the
+    # oracle pairing (it says no_oracle), so the driver has never
+    # hash-checked these ---
     "a20_cms_heavy_hitters",
     "dq14_file_manifest",
     "t5_winnow_fingerprints",
@@ -111,7 +105,7 @@ NEXT_WINDOW_QUEUE: tuple[str, ...] = (
     "mm6_video_meta",
     "mm7_image_dhash_groups",
     "mm8_image_neardup_pairs",
-    # r12 additions awaiting a first attestation round
+    # --- no driver record yet ---
     "gr9_neighbor_jaccard_estimate",
     "ml3_roc_auc",
     "ml4_score_reliability",
@@ -123,86 +117,23 @@ NEXT_WINDOW_QUEUE: tuple[str, ...] = (
     "tt18_epoch_expansion",
     "tt19_scaling_law_subsets",
     "st11_stream_gate_monitor",
-    "tt20_weighted_topk_sample",  # rows-only lane: first driver record
-)
-
-_WINDOW: tuple[str, ...] = (
-    # --- fixed core, shrunk 15 -> 12 for this round only: d3/s1/x1
-    # step out because their families are saturated by the rotation
-    # tail below (d4/d5/d7/d12, the s7-s15 block, x7/x8/x11) and the
-    # 37-name queue + the ml2 re-attestation need 38 slots. They
-    # return to the core in r13; meanwhile they stay green in
-    # tests/test_registry_oracle.py. ---
-    "q1_pricing_summary",
-    "m1_serial_insert",
-    "m4_soft_delete_visible",
-    "f7_messy_dates",
-    "d1_exact_dedup",
-    "t1_token_stats",
-    "st1_stream_ingest_dedup",
-    "tt1_hash_split",
-    "w1_topk_per_group",
-    "gr1_triangle_count",
-    "dq1_column_profile",
-    "pipe4_full_curation",
-    # --- ml2 re-attestation: r11's only red row (IEEE -0.0 after
-    # ROUND of a z-scored train mean; zero-folded on both sides this
-    # round, q_linkage.py) — must face the driver hash again. ---
-    "ml2_leakage_safe_scaler",
-    # --- round-12 rotation: the COMPLETE never-attested queue (37
-    # names, machine-computed: all registry names minus every name in
-    # any CORRECTNESS_r*.json minus the r11 window). After this
-    # window, every registry query has at least one driver record.
-    # Everything rotated OUT (the r11 tail incl. t26/gr7/inc4/dq19/
-    # t25/gr8/tt16/dq20/t27 and the q/p/j/f/m/pipe/pm/x/h/g/w blocks)
-    # stays green in tests/test_registry_oracle.py. ---
-    # q-silhouettes displaced by r11 additions
+    "tt20_weighted_topk_sample",  # rows-only lane
+    # --- attested names that keep each family in the sample ---
     "q17_below_avg_quantity",
     "q18_large_orders",
-    "q22_inactive_high_balance",
-    # dedup: signatures/candidates oracle-paired in r11 via the
-    # portable-md5 pattern but never externally attested
-    "d4_simhash_candidates",
     "d5_minhash_signatures",
     "d7_canonical_corpus",
-    "d12_kmv_source_overlap",
-    # graph: ride the shared edge artifact
     "gr3_pagerank_top",
-    "gr5_kcore",
-    "gr6_neighbor_jaccard",
-    # similarity block
-    "s7_quantize_uint8",
     "s8_cosine_neardup_pairs",
-    "s9_array_battery",
-    "s11_embedding_dim_stats",
     "s13_centroid_distances",
-    "s14_truncated_recall",
-    "s15_softmax_entropy",
-    # streaming batch-equivalence lanes (silent drift hides longest)
     "st4_stream_stream_join",
     "st7_stream_cdc_upsert",
-    "st8_stream_static_enrich",
-    "st10_sliding_counts",
-    # training-data ops
-    "tt4_per_group_sample",
     "tt5_split_leakage",
-    "tt9_mixture_reweight",
-    "tt10_per_source_cap",
-    "tt11_deterministic_shuffle",
-    "tt13_temperature_mixture",
-    # quality / audit
     "dq3_snapshot_diff",
-    "dq6_freshness_lag",
     "fun3_benford_audit",
-    # histograms / windows / range
     "h3_log_histogram",
-    "w7_share_of_total",
     "w8_range_frame",
-    "x7_time_downsample",
-    "x8_explode_outer",
     "x11_minmax_downsample",
-    # pipelines (rows-only)
-    "pipe3_ann_recall",
 )
 
 

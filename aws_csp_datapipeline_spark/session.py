@@ -6,6 +6,14 @@ partition coalescing), shuffle partitions sized to cores rather than
 the 200 default, Arrow enabled for any Pandas-UDF path, and UTC session
 time so timestamp semantics are deployment-independent.
 
+Settings: ``$SPARK_GRAFT_CPUS`` (local cores, default all) and
+``$SPARK_GRAFT_DRIVER_MEM`` (default 8g) size the launch; ``get_spark``
+takes only ``app_name`` and ``retained_stages``. Every SQL tuning value
+here is a constant: shuffle partitions equal the core count, the AQE
+coalescing floor is 256k and sort-merge join is not preferred. They
+are Spark SQL confs, so a deployment changes them on the live session
+with ``spark.conf.set``.
+
 Cold start: the driver JVM maps a dynamic CDS archive (JEP 350) of the
 Spark/Catalyst/Arrow classes instead of loading and verifying them
 from the jars. The archive is built on this machine by the first JVM
@@ -232,50 +240,29 @@ class ClassArchive:
         atexit.register(at_exit)
 
 
-def _env_bool(name: str, default: str) -> str:
-    """Normalize shell boolean idioms (1/yes/true, 0/no/false) and
-    FAIL FAST on anything else — a silently-misread toggle (e.g.
-    'on', a typo) would flip a memory-safety knob without the user
-    knowing, which is worse than the loud error."""
-    raw = os.environ.get(name)
-    if raw is None:
-        return default
-    v = raw.strip().lower()
-    if v in ("1", "true", "yes"):
-        return "true"
-    if v in ("0", "false", "no"):
-        return "false"
-    raise ValueError(f"{name} must be a boolean (1/0/true/false/yes/no), got {raw!r}")
-
-
 def get_spark(
     app_name: str = "aws_csp_datapipeline_spark",
-    cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     retained_stages: int | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores. On a
-    real cluster the master/memory settings come from spark-submit and
-    these builder calls are inert; the sql.* tuning still applies.
-    ``retained_stages`` raises the status store's stage limit (Spark's
-    default keeps 1,000) for a caller that reads job groups back over
-    a long run, such as ``bench.py``.
+    Cores come from ``$SPARK_GRAFT_CPUS`` (default: all local cores)
+    and the driver heap from ``$SPARK_GRAFT_DRIVER_MEM`` (default 8g).
+    On a real cluster the master/memory settings come from
+    spark-submit and these builder calls are inert; the sql.* tuning
+    still applies, and a deployment changes any of it at runtime with
+    ``spark.conf.set``. ``retained_stages`` raises the status store's
+    stage limit (Spark's default keeps 1,000) for a caller that reads
+    job groups back over a long run, such as ``bench.py``.
     """
-    if cpus is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
     n_threads = os.cpu_count() or 8 if cpus == "*" else int(cpus)
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", n_threads)
-        )
 
     driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(n_threads))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # Floor for AQE's byte-based partition coalescer (r12). The
@@ -292,11 +279,9 @@ def get_spark(
         # 0.87×). Inert at production partition sizes (AQE only
         # coalesces below the advisory size; ≥ MB-scale partitions
         # never touch this floor), so it is a policy default, not a
-        # local[32] tune; env-overridable like every scale knob here.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "256k"),
-        )
+        # local[32] tune. Kept on 4 cores too: without it perfbench
+        # curation wall_s went 2.16 -> 2.34 s median (6 pairs).
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Prefer shuffled-hash over sort-merge when no side broadcasts:
@@ -306,13 +291,11 @@ def get_spark(
         # shuffle partitions scale with the cluster, AQE splits skewed
         # partitions, and small dims broadcast anyway. Operational
         # caveat (ADVICE r6): shuffled-hash has no sort-spill fallback
-        # for the build side, so on memory-constrained or heavily
-        # skewed deployments flip SPARK_GRAFT_PREFER_SMJ=true to
-        # revert to sort-merge session-wide (SCALE.md "Join strategy").
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            _env_bool("SPARK_GRAFT_PREFER_SMJ", default="false"),
-        )
+        # for the build side, so memory-constrained or heavily skewed
+        # deployments revert to sort-merge session-wide with
+        # spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
+        # (SCALE.md "Join strategy").
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

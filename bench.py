@@ -24,8 +24,7 @@ one untimed run first.
 
 Warm/cold contract. Warm across reps (built once per session and
 reused by every later build): ``catalog.load_table`` plan handles,
-``exprcache`` expression trees, s1's query vector
-(``similarity.query_vector``) and Spark's generated classes (the
+s1's query vector (``similarity.query_vector``) and Spark's generated classes (the
 session's codegen cache holds the headline's working set, so a
 query's second rep compiles none — ``codegen_compiles`` in its
 ``layers``), besides the JVM's JIT and the OS page cache. Cold in

@@ -12,7 +12,6 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
 def spark():
     # Small local session for test speed; prod tuning lives in get_spark.
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
     s = get_spark(app_name="tests")
     yield s
 

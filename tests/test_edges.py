@@ -249,24 +249,6 @@ def test_dhash_degenerate_width_rejected_not_colliding(spark):
         MM.image_dhash(media, fake_decode=False).collect()
 
 
-def test_env_bool_validation():
-    import os
-
-    from aws_csp_datapipeline_spark.session import _env_bool
-
-    os.environ["_SG_TEST_BOOL"] = "Yes"
-    assert _env_bool("_SG_TEST_BOOL", "false") == "true"
-    os.environ["_SG_TEST_BOOL"] = "0"
-    assert _env_bool("_SG_TEST_BOOL", "true") == "false"
-    os.environ["_SG_TEST_BOOL"] = "on"
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        _env_bool("_SG_TEST_BOOL", "false")
-    del os.environ["_SG_TEST_BOOL"]
-    assert _env_bool("_SG_TEST_BOOL", "true") == "true"
-
-
 def test_lsh_prefilter_tracks_low_thresholds(spark):
     """minhash_lsh_pairs at threshold=0.6 must still equal the exact
     pair set — the auto pre-filter cut relaxes with the threshold."""

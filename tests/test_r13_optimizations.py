@@ -13,7 +13,7 @@ import time
 
 import pytest
 
-from aws_csp_datapipeline_spark import catalog
+from aws_csp_datapipeline_spark import catalog, lifecycle
 from aws_csp_datapipeline_spark.plans.registry import queries
 
 
@@ -105,16 +105,20 @@ class TestZeroEagerJobsAtPlanBuild:
         # query vector once — both one-time per-session costs now
         # that load_table / query_vector memoize. The pin is that a
         # REPEAT build (what every bench rep after the first pays)
-        # launches nothing.
-        for name in bench.HEADLINE:
-            if name in qs:
-                qs[name](spark, sf_oracle)
-        group = "r13-plan-build-probe"
-        sc.setJobGroup(group, "plan build must stay lazy")
-        try:
+        # launches nothing. Each pass builds inside a scope, so the
+        # builders' persisted frames leave the cache when it exits
+        # and later tests plan against an empty one.
+        with lifecycle.scope():
             for name in bench.HEADLINE:
                 if name in qs:
                     qs[name](spark, sf_oracle)
+        group = "r13-plan-build-probe"
+        sc.setJobGroup(group, "plan build must stay lazy")
+        try:
+            with lifecycle.scope():
+                for name in bench.HEADLINE:
+                    if name in qs:
+                        qs[name](spark, sf_oracle)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         ids = sc.statusTracker().getJobIdsForGroup(group)
@@ -135,8 +139,9 @@ class TestEr3SharedLaneSubexpressions:
     def test_shared_projection_above_spread_below_generate(
         self, spark, sf_oracle
     ):
-        df = queries()["er3_indel_complete_matches"](spark, sf_oracle)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        with lifecycle.scope():
+            df = queries()["er3_indel_complete_matches"](spark, sf_oracle)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
         lines = plan.splitlines()
 
         gen = next(

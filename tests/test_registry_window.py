@@ -1,20 +1,16 @@
 """Attestation-debt guard: every registry query must be either
-driver-attested (a row in some committed CORRECTNESS_r*.json), inside
-the current attestation window, or explicitly queued for the next
-round's rotation (registry.NEXT_WINDOW_QUEUE). Rounds 2-4 shipped an
-identical window and silently accumulated 163 never-attested queries;
-this test makes that impossible to repeat — adding a lane without
-queueing it fails CI immediately."""
+driver-attested (a row in some committed CORRECTNESS_r*.json) or
+inside the current attestation window (registry._WINDOW). Rounds 2-4
+shipped an identical window and silently accumulated 163
+never-attested queries; this test makes that impossible to repeat —
+adding a lane without a window slot fails CI immediately."""
 
 import glob
 import json
 import os
 
 from aws_csp_datapipeline_spark.plans import registry
-from aws_csp_datapipeline_spark.plans.registry import (
-    _WINDOW,
-    NEXT_WINDOW_QUEUE,
-)
+from aws_csp_datapipeline_spark.plans.registry import _WINDOW
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -35,23 +31,18 @@ def _attested_names() -> set[str]:
 
 def test_every_query_attested_windowed_or_queued():
     all_names = {s.name for s in registry.specs()}
-    uncovered = (
-        all_names
-        - _attested_names()
-        - set(_WINDOW)
-        - set(NEXT_WINDOW_QUEUE)
-    )
+    uncovered = all_names - _attested_names() - set(_WINDOW)
     assert not uncovered, (
-        "registry queries with no driver record, no window slot, and "
-        f"no rotation-queue entry: {sorted(uncovered)} — add them to "
-        "registry.NEXT_WINDOW_QUEUE (new lanes get a first-round slot)"
+        "registry queries with no driver record and no window slot: "
+        f"{sorted(uncovered)} — add them to registry._WINDOW (new "
+        "lanes get a first-round slot)"
     )
 
 
 def test_window_and_queue_reference_real_queries():
     all_names = {s.name for s in registry.specs()}
-    ghosts = (set(_WINDOW) | set(NEXT_WINDOW_QUEUE)) - all_names
-    assert not ghosts, f"window/queue names not in the registry: {sorted(ghosts)}"
+    ghosts = set(_WINDOW) - all_names
+    assert not ghosts, f"window names not in the registry: {sorted(ghosts)}"
 
 
 def test_window_size_matches_driver_sample():

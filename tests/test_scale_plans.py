@@ -130,18 +130,21 @@ def test_auto_broadcast_still_kicks_in_at_test_scale(spark, sf_oracle):
 
 def test_results_unchanged_by_join_strategy(spark, sf_oracle):
     """The join-strategy change is physical only: q3's rows are
-    identical with and without size-based broadcast. Both thresholds
-    are pinned explicitly for EACH run — the no_auto_broadcast module
-    fixture may still have broadcast disabled when this test runs, so
-    relying on the ambient value would make the comparison vacuous
-    (both runs broadcast-free)."""
+    identical with and without size-based broadcast, and with
+    sort-merge join preferred through ``spark.conf.set`` (how a
+    deployment reverts the session's shuffled-hash preference). Both
+    thresholds are pinned explicitly for EACH run — the
+    no_auto_broadcast module fixture may still have broadcast disabled
+    when this test runs, so relying on the ambient value would make
+    the comparison vacuous (both runs broadcast-free)."""
     by_name = {s.name: s for s in specs()}
     fn = by_name["q3_shipping_priority"].fn
+    smj = "spark.sql.join.preferSortMergeJoin"
     keys = [
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.autoBroadcastJoinThreshold",
     ]
-    old = {k: spark.conf.get(k, None) for k in keys}
+    old = {k: spark.conf.get(k, None) for k in [*keys, smj]}
 
     def _run(threshold: str):
         for k in keys:
@@ -155,13 +158,17 @@ def test_results_unchanged_by_join_strategy(spark, sf_oracle):
         plan = _physical_plan(fn(spark, sf_oracle))
         assert _broadcast_count(plan) >= 1, plan
         without_auto = _run("-1")
+        spark.conf.set(smj, "true")
+        sort_merge = _run("-1")
+        plan = _physical_plan(fn(spark, sf_oracle))
+        assert "SortMergeJoin" in plan, plan
     finally:
         for k, v in old.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    assert with_auto == without_auto
+    assert with_auto == without_auto == sort_merge
 
 
 def test_runtime_bloom_filter_injects_into_fact_joins(spark, sf_oracle):

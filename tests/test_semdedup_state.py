@@ -15,13 +15,23 @@ Load-bearing assertions:
 """
 
 import pyspark.sql.functions as F
+import pytest
 
+from aws_csp_datapipeline_spark import lifecycle
 from aws_csp_datapipeline_spark.catalog import load_table
 from aws_csp_datapipeline_spark.functions import semdedup_state as SS
 from aws_csp_datapipeline_spark.functions.similarity import (
     semdedup_incremental,
     semdedup_kept_state,
 )
+
+
+@pytest.fixture(autouse=True)
+def _scoped():
+    """Build every in-session lane inside a scope, so its persisted
+    frames leave the cache with the test and later plans see none."""
+    with lifecycle.scope():
+        yield
 
 
 def test_state_build_matches_in_session_kept_state(spark, sf_oracle, tmp_path):

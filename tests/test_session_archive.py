@@ -142,7 +142,7 @@ def test_classpath_dir_env_keeps_the_plain_launch(install, monkeypatch, tmp_path
 SCRIPT = """
 import sys
 from aws_csp_datapipeline_spark.session import get_spark
-spark = get_spark(app_name="archive-test", cpus=1)
+spark = get_spark(app_name="archive-test")
 spark.range(10).count()
 if sys.argv[1] == "option":
     jvm = spark._jvm
@@ -163,6 +163,7 @@ def test_first_interpreter_publishes_and_the_second_maps(tmp_path):
         os.environ,
         XDG_CACHE_HOME=str(tmp_path / "cache"),
         SPARK_GRAFT_DRIVER_MEM="1g",
+        SPARK_GRAFT_CPUS="1",
         PYTHONPATH=ROOT,
     )
 

@@ -10,19 +10,14 @@ True and were blind to it. This sweep types BOTH sides without running
 the data (Spark schemas are lazy; DuckDB relations bind without
 fetching) and flags any pair whose canonical types differ.
 
-Usage:
-    python tools/type_parity.py            # sweep every oracle-paired query
-    python tools/type_parity.py --names dq9_outlier_audit,d10_semdedup
-
-Exit code = number of HARD mismatches (see ``classify``).
+A library, not a sweep of its own: ``tools/verify_drive.py`` checks
+every query it drives with ``column_report``, and the oracle tests do
+the same through ``tests/oracle.assert_type_parity``.
 """
 
 from __future__ import annotations
 
-import argparse
-import os
 import re
-import sys
 
 # DuckDB type name -> canonical. Parameterized types (DECIMAL, lists,
 # maps, structs) are handled structurally in _canon_duck.
@@ -177,65 +172,3 @@ def spark_canonical_schema(df) -> dict[str, str]:
 
 def duck_canonical_schema(rel) -> dict[str, str]:
     return {c: _canon_duck(str(t)) for c, t in zip(rel.columns, rel.types)}
-
-
-def main() -> int:
-    repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
-    if repo_root not in sys.path:
-        sys.path.insert(0, repo_root)
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--names", default="", help="comma-separated subset")
-    args = ap.parse_args()
-
-    import duckdb
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as e
-
-    qs, osql = e.queries(), e.oracle_sql()
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
-
-    names = (
-        [n for n in args.names.split(",") if n]
-        if args.names
-        else [n for n in qs if n in osql]
-    )
-    hard = 0
-    for name in names:
-        if name not in osql:
-            print(f"{name}: rows-only (no oracle)")
-            continue
-        try:
-            duck_types = duck_canonical_schema(con.sql(osql[name]))
-            spark_types = spark_canonical_schema(qs[name](spark, args.sf_dir))
-        except Exception as exc:
-            hard += 1
-            print(f"{name}: ERROR {type(exc).__name__}: {str(exc)[:160]}")
-            continue
-        mismatches = list(column_report(duck_types, spark_types))
-        for col, d, s, sev in mismatches:
-            print(f"{name}: {sev} {col}: oracle={d} spark={s}")
-            hard += sev == "HARD"
-    print(f"swept: {len(names)}, hard mismatches: {hard}")
-    return min(hard, 125)
-
-
-if __name__ == "__main__":
-    sys.exit(main())

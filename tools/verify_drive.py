@@ -18,11 +18,6 @@ import argparse
 import os
 import sys
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def main() -> int:
     repo_root = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
@@ -36,7 +31,6 @@ def main() -> int:
                     help="prefix size when not --all/--names")
     args = ap.parse_args()
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     spark = (
@@ -49,15 +43,16 @@ def main() -> int:
 
     import __spark_entry__ as e
     from aws_csp_datapipeline_spark import lifecycle
+    from tests.oracle import duck_connection
+    from tools.type_parity import (
+        column_report,
+        duck_canonical_schema,
+        spark_canonical_schema,
+    )
 
     print("entry rows:", e.entry(spark).count())
     qs, osql = e.queries(), e.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
+    con = duck_connection(args.sf_dir)
 
     if args.names:
         names = [n for n in args.names.split(",") if n]
@@ -83,12 +78,6 @@ def main() -> int:
             # type-sensitive (r8: dq9/dq13/mm4 hash-failed on
             # HUGEINT/DECIMAL(38,0) with identical values) and the
             # Python tuple compare below cannot see it
-            from tools.type_parity import (
-                column_report,
-                duck_canonical_schema,
-                spark_canonical_schema,
-            )
-
             tmis = list(
                 column_report(duck_canonical_schema(rel),
                               spark_canonical_schema(df))
