@@ -1079,9 +1079,9 @@ def tt16_moore_lewis(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-tagged token stream are persisted, and the in-domain model
     (filter src0 → group), the general model (group all), the two
     vocab scalars, and the scored target stream all derive from those
-    two caches. (PLAN_AUDIT's static scan count still shows the
-    cache-embedded FileScans once per consumer; actual body reads =
-    two cache materializations.) The target stream is
+    two caches: PLAN_AUDIT's executed-plan ledger walks each cached
+    relation once, and its 2 parquet scans are those two cache
+    materializations. The target stream is
     scored against both models in ONE pass (per-row p_in and p_gen,
     one per-doc aggregate). Model joins stay unhinted — AQE sizes the
     build sides (the t26 reasoning: a forced broadcast of a

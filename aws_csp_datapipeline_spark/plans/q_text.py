@@ -814,9 +814,10 @@ def t25_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bigram relation is the substrate of BOTH the model (bgc →
     # heads → probs) and the scoring side — persist it so document
     # bodies are read once for all bigram consumers (un-persisted,
-    # Catalyst re-scans the corpus per consumer: 4 scans measured in
-    # PLAN_AUDIT; with the cache it is the bigram TABLE, orders
-    # smaller than the bodies, that feeds every reuse). Spread the
+    # Catalyst re-scans the corpus per consumer; with the cache it is
+    # the bigram TABLE, orders smaller than the bodies, that feeds
+    # every reuse — PLAN_AUDIT's executed-plan ledger shows 2 parquet
+    # scans: the cache's one and the vocab count's). Spread the
     # narrow projection first (r12): on a single-row-group extract
     # the bigram/token explodes otherwise run on ONE task per cache
     # pass (no-op on real multi-row-group layouts).

@@ -47,9 +47,11 @@ holds the per-key median over reps of ``build_s`` (plan construction
 in Python/py4j), the group's jobs, stages, skipped stages, tasks,
 task seconds, shuffle MB and spill MB (``exec_s`` is the time during
 which its jobs ran), the Catalyst analysis, optimization and
-planning times of the forced plan and ``codegen_compiles``, the
-classes Spark generated and compiled during the sample. The last rep
-also prints one line per stage to stderr.
+planning times of the forced plan, ``codegen_compiles``, the
+classes Spark generated and compiled during the sample, and the
+``plan_ledger`` keys: the exchanges, joins and scans of the plan AQE
+ran (``PLAN_AUDIT.md`` and ``tests/test_plan_budget.py`` read the
+same ledger). The last rep also prints one line per stage to stderr.
 
 Those reads come from Spark's status store, which evicts stages past
 ``spark.ui.retainedStages``, SKIPPED ones first and including those of
@@ -192,6 +194,85 @@ def force(df):
     return fdf, fdf.collect()[0][0]
 
 
+# The ledger's exchange key for each ShuffleExchange partitioning class.
+EXCHANGE_KINDS = {
+    "HashPartitioning": "exch_hash",
+    "RangePartitioning": "exch_range",
+    "RoundRobinPartitioning": "exch_rr",
+    "SinglePartition$": "exch_single",
+}
+JOINS = {
+    "BroadcastHashJoin": "bhj",
+    "SortMergeJoin": "smj",
+    "ShuffledHashJoin": "shj",
+    "BroadcastNestedLoopJoin": "bnlj",
+    "CartesianProduct": "cartesian",
+}
+LEDGER_KEYS = (
+    *EXCHANGE_KINDS.values(), "exch_other", "reused_exch",
+    "bhj", "bhj_left", "smj", "shj", "bnlj", "cartesian",
+    "cached_scans", "scans", "pushed", "pandas", "pyrow",
+)
+
+
+def plan_ledger(fdf) -> dict[str, int]:
+    """What the forced DataFrame ``fdf`` ran: operator counts over its
+    final adaptive plan, so they show what AQE chose at runtime (join
+    strategy, build side, reused exchanges), not the initial plan.
+
+    The walk descends ``AdaptiveSparkPlan`` into its executed plan,
+    each query stage into its plan and each node into its subqueries.
+    A ``ReusedExchange`` is counted and not descended, nor is a
+    ``ReusedSubquery`` (their work ran once, elsewhere in the plan). An ``InMemoryTableScan`` is counted
+    per consumer, but its relation's cached plan is walked once per
+    relation. ``bhj_left`` counts the broadcast joins that built their
+    left side; ``pandas`` the Arrow batch operators and ``pyrow`` the
+    per-row Python evaluators."""
+    jvm = fdf.sparkSession._jvm
+    ledger = dict.fromkeys(LEDGER_KEYS, 0)
+    seen: set[int] = set()
+    todo = [fdf._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            todo.append(node.plan())
+            continue
+        if name == "ReusedExchange":
+            ledger["reused_exch"] += 1
+            continue
+        if name == "ReusedSubquery":
+            continue
+        if name == "Exchange":
+            kind = node.outputPartitioning().getClass().getSimpleName()
+            ledger[EXCHANGE_KINDS.get(kind, "exch_other")] += 1
+        elif name in JOINS:
+            ledger[JOINS[name]] += 1
+            if name == "BroadcastHashJoin" and node.buildSide().toString() == "BuildLeft":
+                ledger["bhj_left"] += 1
+        elif name == "InMemoryTableScan":
+            ledger["cached_scans"] += 1
+            relation = node.relation()
+            key = jvm.System.identityHashCode(relation.cacheBuilder())
+            if key not in seen:
+                seen.add(key)
+                todo.append(relation.cachedPlan())
+        elif name.startswith("Scan parquet"):
+            ledger["scans"] += 1
+            pushed = node.metadata().get("PushedFilters")
+            ledger["pushed"] += pushed.isDefined() and pushed.get() != "[]"
+        elif name.endswith(("InPandas", "InArrow")):
+            ledger["pandas"] += 1
+        elif name in ("BatchEvalPython", "ArrowEvalPython"):
+            ledger["pyrow"] += 1
+        for kids in (node.children(), node.subqueries()):
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return ledger
+
+
 def codegen_compiles(spark) -> int:
     """Classes Spark has generated and compiled in this JVM so far."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
@@ -200,7 +281,8 @@ def codegen_compiles(spark) -> int:
 
 def sample(spark, fn, sf_dir: str, group: str) -> tuple[float, dict]:
     """One cold sample of query ``fn`` in job group ``group``: its
-    seconds, then its layer numbers, read after the clock stops."""
+    seconds, then its layer numbers and plan ledger, read after the
+    clock stops."""
     spark.sparkContext.setJobGroup(group, group)
     compiled = codegen_compiles(spark)
     t0 = time.perf_counter()
@@ -214,6 +296,7 @@ def sample(spark, fn, sf_dir: str, group: str) -> tuple[float, dict]:
         "build_s": build_s,
         "codegen_compiles": codegen_compiles(spark) - compiled,
         **catalyst_phases(fdf),
+        **plan_ledger(fdf),
     }
     try:
         stats = job_group_stats(spark, group)

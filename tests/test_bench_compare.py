@@ -7,6 +7,8 @@ import glob
 import json
 import os
 import re
+import subprocess
+import sys
 
 import pytest
 
@@ -58,6 +60,37 @@ def test_anchored_comparison_writes_one_record(tmp_path, monkeypatch, capsys):
     assert written["summary"]["host_anchor_factor"] == 2.0
     assert written["frozen"]["queries"] == {"a": 1.0, "b": 2.0}
     assert "host factor: 2.000" in capsys.readouterr().out
+
+
+def test_out_record_survives_a_closed_stdout(tmp_path):
+    """``--out`` is written before the table is printed, so a reader
+    that closes stdout early (``| head``) does not lose the record.
+    Unbuffered, the first print meets the closed pipe."""
+    p = tmp_path / "run.out"
+    p.write_text(json.dumps({"queries": {"a": 1.0}}) + "\n")
+    out = tmp_path / "anchored.json"
+    r, w = os.pipe()
+    os.close(r)
+    try:
+        subprocess.run(
+            [sys.executable, _path("tools/bench_compare.py"), str(p), str(p), "--out", str(out)],
+            stdout=w, stderr=subprocess.DEVNULL, env={**os.environ, "PYTHONUNBUFFERED": "1"},
+            check=False,
+        )
+    finally:
+        os.close(w)
+    assert json.loads(out.read_text())["summary"]["shared_queries"] == 1
+
+
+@pytest.mark.parametrize("name, sf", [("BENCH_sf0.1_c4.json", "0.1"), ("BENCH_sf1_c4.json", "1")])
+def test_reads_the_4core_anchor_records(name, sf):
+    """The 4-core anchors are bench.py records of the whole headline,
+    each query's ``layers`` carrying its plan ledger."""
+    import bench
+
+    rec = load_record(_path(name))
+    assert rec["sf"] == sf and set(rec["queries"]) == set(bench.HEADLINE)
+    assert all(set(bench.LEDGER_KEYS) <= set(layer) for layer in rec["layers"].values())
 
 
 def test_recomputes_the_committed_anchored_summary():

@@ -1,29 +1,39 @@
 """Plan-budget regression gate: the committed PLAN_AUDIT.md table IS
-the per-query physical-plan budget. A future edit that adds a shuffle
-exchange, a Python row eval, or a CartesianProduct to a bench-headline
-query fails here instead of surfacing as wall-clock noise —
+the per-query budget of the plan AQE ran. Each query is sampled cold
+at the oracle scale and gated on its ``bench.plan_ledger``: a future
+edit that adds an exchange of any kind, a join, a scan, a Python row
+eval or a CartesianProduct to a bench-headline query, or loses an
+exchange reuse, fails here instead of surfacing as wall-clock noise —
 regenerating the table (`python tools/plan_audit.py`) is the explicit
-way to accept a plan change in review.
+way to accept a plan change in review. Each row includes
+``bench.force``'s one ``exch_single``, except where the query already
+ends in one partition (the top-k rows).
 
-Budgets are upper bounds (a plan that got CHEAPER passes; refresh the
-table to ratchet it down). pyrow and cartesian are hard zeros
-regardless of the table — the repo's scale policy bans them outright
-in headline plans."""
+Exchanges of each partitioning kind, total joins, parquet scans and
+Arrow operators are upper bounds (a plan that got CHEAPER passes;
+refresh the table to ratchet it down); ``reused_exch`` is a lower
+bound. pyrow and cartesian are hard zeros regardless of the table —
+the repo's scale policy bans them outright in headline plans. The
+broadcast build side (``bhj_left``) is recorded, not gated: AQE picks
+it at runtime, from whichever query stage finishes first."""
 
 import os
-import sys
 
 import pytest
+from pyspark.sql import functions as F
+
+import bench
+from tools.plan_audit import parse_audit_table
 
 REPO = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
-for p in (REPO, os.path.join(REPO, "tools")):
-    if p not in sys.path:
-        sys.path.insert(0, p)
-
-import bench  # noqa: E402
-from tools.plan_audit import collect_features, parse_audit_table  # noqa: E402
-
 BUDGETS = parse_audit_table(os.path.join(REPO, "PLAN_AUDIT.md"))
+UPPER = ("exch_hash", "exch_range", "exch_rr", "exch_single", "exch_other", "scans", "pandas")
+JOINS = ("bhj", "smj", "shj", "bnlj")
+
+
+def ran(df) -> dict[str, int]:
+    """The ledger of ``df``'s forced run."""
+    return bench.plan_ledger(bench.force(df)[0])
 
 
 def test_audit_table_covers_headline():
@@ -31,22 +41,68 @@ def test_audit_table_covers_headline():
     headline query without regenerating PLAN_AUDIT.md fails here."""
     missing = [n for n in bench.HEADLINE if n not in BUDGETS]
     assert missing == [], f"regenerate PLAN_AUDIT.md: no budget for {missing}"
+    assert all(set(b) == set(bench.LEDGER_KEYS) for b in BUDGETS.values())
 
 
 @pytest.mark.parametrize("name", [n for n in bench.HEADLINE if n in BUDGETS])
 def test_headline_plan_within_budget(spark, name, sf_oracle):
+    from aws_csp_datapipeline_spark import lifecycle
     from aws_csp_datapipeline_spark.plans import registry
 
-    qs = {s.name: s.fn for s in registry.specs()}
-    got = collect_features(qs[name](spark, sf_oracle))
+    with lifecycle.scope():
+        _, got = bench.sample(spark, registry.queries()[name], sf_oracle, f"budget-{name}")
+    spark.catalog.clearCache()
     budget = BUDGETS[name]
     assert got["cartesian"] == 0, f"{name}: CartesianProduct in plan"
     assert got["pyrow"] == 0, f"{name}: Python row eval in plan"
-    for feat in ("exch", "scans", "pandas"):
-        assert got[feat] <= budget[feat], (
-            f"{name}: {feat} grew {budget[feat]} -> {got[feat]} — a plan "
-            "regression, or regenerate PLAN_AUDIT.md to accept it"
-        )
+    grew = {k: (budget[k], got[k]) for k in UPPER if got[k] > budget[k]}
+    joins = [sum(led[k] for k in JOINS) for led in (budget, got)]
+    if joins[1] > joins[0]:
+        grew["joins"] = tuple(joins)
+    assert not grew, (
+        f"{name}: grew (budget, ran) {grew} — a plan regression, or "
+        "regenerate PLAN_AUDIT.md to accept it"
+    )
+    assert got["reused_exch"] >= budget["reused_exch"], (
+        f"{name}: reused exchanges fell {budget['reused_exch']} -> {got['reused_exch']}"
+    )
+
+
+def test_ledger_counts_a_round_robin_exchange(spark):
+    assert ran(spark.range(100).repartition(4))["exch_rr"] == 1
+
+
+def test_ledger_counts_a_reused_exchange(spark):
+    agg = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    assert ran(agg.union(agg))["reused_exch"] >= 1
+
+
+def test_ledger_counts_a_broadcast_join(spark):
+    big = spark.range(1000).withColumn("k", F.col("id") % 10)
+    small = spark.range(10).withColumnRenamed("id", "k")
+    assert ran(big.join(F.broadcast(small), "k"))["bhj"] == 1
+
+
+def test_ledger_walks_a_cached_relation_once(spark):
+    """Two scans of one persisted frame are two ``cached_scans``, but
+    the shuffle inside it ran once and is counted once."""
+    agg = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count().persist()
+    try:
+        got = ran(agg.union(agg))
+    finally:
+        agg.unpersist()
+    assert got["cached_scans"] == 2
+    assert (got["exch_hash"], got["exch_single"]) == (1, 1)
+
+
+def test_ledger_counts_a_subquery_exchange(spark):
+    """The subquery's hash and single-partition exchanges are counted
+    beside ``force``'s own."""
+    got = ran(spark.sql(
+        "SELECT id FROM range(10) WHERE id < "
+        "(SELECT max(c) FROM (SELECT id % 3 AS k, count(*) AS c FROM range(100) GROUP BY k))"
+    ))
+    assert (got["exch_hash"], got["exch_single"]) == (1, 2)
 
 
 @pytest.mark.parametrize(
@@ -75,7 +131,7 @@ def test_plan_build_is_lazy(spark, name, n_reads, sf_oracle):
     from aws_csp_datapipeline_spark import lifecycle
     from aws_csp_datapipeline_spark.plans import registry
 
-    qs = {s.name: s.fn for s in registry.specs()}
+    qs = registry.queries()
     sc = spark.sparkContext
     group = f"lazy-build-{name}"
     sc.setJobGroup(group, "plan-build laziness gate")

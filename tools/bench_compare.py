@@ -147,6 +147,18 @@ def main() -> None:
     summary = summarize(old, new, record)
     if not summary["shared_queries"]:
         raise SystemExit("no shared queries")
+    # The record goes first: a reader that closes stdout early
+    # (``| head``) must not cost it.
+    if args.out:
+        out = {
+            "protocol": "anchored-bench v2 (tools/bench_compare.py)",
+            "summary": summary,
+            "current": new,
+            "frozen": old,
+            "record_source": args.record,
+        }
+        with open(args.out, "w") as fh:
+            json.dump(out, fh, indent=1)
 
     oq, nq = times(old), times(new)
     rows = sorted(
@@ -171,17 +183,6 @@ def main() -> None:
     )
     for line in layer_lines(old, new, [n for _, n in movers[: args.top]]):
         print(line)
-
-    if args.out:
-        out = {
-            "protocol": "anchored-bench v2 (tools/bench_compare.py)",
-            "summary": summary,
-            "current": new,
-            "frozen": old,
-            "record_source": args.record,
-        }
-        with open(args.out, "w") as fh:
-            json.dump(out, fh, indent=1)
 
 
 if __name__ == "__main__":
