@@ -223,9 +223,9 @@ def plan_ledger(fdf) -> dict[str, int]:
     The walk descends ``AdaptiveSparkPlan`` into its executed plan,
     each query stage into its plan and each node into its subqueries.
     A ``ReusedExchange`` is counted and not descended, nor is a
-    ``ReusedSubquery`` (their work ran once, elsewhere in the plan). An ``InMemoryTableScan`` is counted
-    per consumer, but its relation's cached plan is walked once per
-    relation. ``bhj_left`` counts the broadcast joins that built their
+    ``ReusedSubquery`` (their work ran once, elsewhere in the plan).
+    An ``InMemoryTableScan`` is counted per consumer, but its
+    relation's cached plan is walked once per relation. ``bhj_left`` counts the broadcast joins that built their
     left side; ``pandas`` the Arrow batch operators and ``pyrow`` the
     per-row Python evaluators."""
     jvm = fdf.sparkSession._jvm

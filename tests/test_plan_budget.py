@@ -28,7 +28,7 @@ from tools.plan_audit import parse_audit_table
 REPO = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
 BUDGETS = parse_audit_table(os.path.join(REPO, "PLAN_AUDIT.md"))
 UPPER = ("exch_hash", "exch_range", "exch_rr", "exch_single", "exch_other", "scans", "pandas")
-JOINS = ("bhj", "smj", "shj", "bnlj")
+JOIN_KEYS = ("bhj", "smj", "shj", "bnlj")
 
 
 def ran(df) -> dict[str, int]:
@@ -56,7 +56,7 @@ def test_headline_plan_within_budget(spark, name, sf_oracle):
     assert got["cartesian"] == 0, f"{name}: CartesianProduct in plan"
     assert got["pyrow"] == 0, f"{name}: Python row eval in plan"
     grew = {k: (budget[k], got[k]) for k in UPPER if got[k] > budget[k]}
-    joins = [sum(led[k] for k in JOINS) for led in (budget, got)]
+    joins = [sum(led[k] for k in JOIN_KEYS) for led in (budget, got)]
     if joins[1] > joins[0]:
         grew["joins"] = tuple(joins)
     assert not grew, (

@@ -54,7 +54,6 @@ def main() -> None:
     for name in bench.HEADLINE:
         with lifecycle.scope():
             _, layer = bench.sample(spark, qs[name], sf_dir, f"plan-audit-{name}")
-        spark.catalog.clearCache()
         if layer["cartesian"]:
             flags.append(f"{name}: CartesianProduct in plan")
         if layer["pyrow"]:
